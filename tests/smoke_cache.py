@@ -36,9 +36,8 @@ import os
 import re
 import threading
 
+from tests.conftest import SF_SMOKE
 from tytodb_spark.queries import REGISTRY
-
-SF_SMOKE = "/root/testdata/sf0.001"
 
 _LOCK = threading.Lock()
 _STARTED: dict[str, threading.Event] = {}

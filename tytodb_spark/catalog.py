@@ -11,12 +11,14 @@ index, src/query.rs:234-370, are subsumed by Parquet row-group stats).
 from __future__ import annotations
 
 import os
-from functools import lru_cache
+import threading
+from collections import OrderedDict
+from typing import NamedTuple
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import TimestampNTZType
+from pyspark.sql.types import StructType, TimestampNTZType
 
 from tytodb_spark.session import tune
 
@@ -40,40 +42,70 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-@lru_cache(maxsize=256)
-def _nanos_ts_columns(path: str) -> tuple[str, ...]:
-    """Columns stored as parquet TIMESTAMP(NANOS) — Spark reads them as
-    long (spark.sql.legacy.parquet.nanosAsLong) and we convert to
-    microsecond timestamps (truncation, matching DuckDB's ns→µs cast)."""
-    schema = pq.read_schema(path)
-    return tuple(f.name for f in schema if str(f.type) == "timestamp[ns]")
+class _Layout(NamedTuple):
+    schema: StructType  # as Spark infers it from the file
+    nanos: tuple[str, ...]  # parquet TIMESTAMP(NANOS), read as long
+    ntz: tuple[str, ...]  # read as TIMESTAMP_NTZ
 
 
-def _read_table(spark: SparkSession, path: str) -> DataFrame:
-    df = spark.read.parquet(path)
-    for c in _nanos_ts_columns(path):
+# (path, st_mtime_ns, st_size) -> _Layout, least recently used first. The
+# stat fields make a rewritten file a miss, so its schema is inferred again.
+_LAYOUTS: OrderedDict[tuple[str, int, int], _Layout] = OrderedDict()
+_LAYOUTS_MAX = 256
+_LAYOUTS_LOCK = threading.Lock()
+
+
+def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """A new DataFrame over ``<sf_dir>/<name>.parquet`` on every call (so a
+    self-join of two calls keeps distinct attribute ids).
+
+    The file's schema is inferred by one Spark job the first time it is
+    seen; later calls pass the remembered schema to the reader, which then
+    launches no job. Parquet TIMESTAMP(NANOS) columns, which Spark reads as
+    long (spark.sql.legacy.parquet.nanosAsLong, set by ``tune``), become
+    microsecond timestamps by truncation, matching DuckDB's ns→µs cast.
+    Micros-precision timestamps, which Spark reads as TIMESTAMP_NTZ, become
+    TIMESTAMP: unix_micros()/withWatermark() reject NTZ, and with the
+    session tz at UTC (session.py) reinterpreting NTZ wall-clock as
+    instants matches DuckDB's epoch_us on the same files.
+    """
+    tune(spark)
+    path = table_path(sf_dir, name)
+    st = os.stat(path)
+    key = (path, st.st_mtime_ns, st.st_size)
+    with _LAYOUTS_LOCK:
+        layout = _LAYOUTS.get(key)
+        if layout is not None:
+            _LAYOUTS.move_to_end(key)
+    if layout is None:
+        df = spark.read.parquet(path)
+        layout = _Layout(
+            df.schema,
+            tuple(f.name for f in pq.read_schema(path) if str(f.type) == "timestamp[ns]"),
+            tuple(f.name for f in df.schema.fields if isinstance(f.dataType, TimestampNTZType)),
+        )
+        with _LAYOUTS_LOCK:
+            _LAYOUTS[key] = layout
+            if len(_LAYOUTS) > _LAYOUTS_MAX:
+                _LAYOUTS.popitem(last=False)
+    else:
+        df = spark.read.schema(layout.schema).parquet(path)
+    for c in layout.nanos:
         # integer `div`, not `/`: double division of ~1.7e18 ns loses the
         # low bits (53-bit mantissa) and can round the microsecond up
         df = df.withColumn(c, F.expr(f"timestamp_micros(`{c}` div 1000)"))
-    # Canonicalize event-time: micros-precision parquet timestamps read
-    # natively as TIMESTAMP_NTZ, which unix_micros()/withWatermark() reject.
-    # Session tz is UTC (session.py), so reinterpreting NTZ wall-clock as
-    # instants matches DuckDB's epoch_us on the same files.
-    ntz = [f.name for f in df.schema.fields if isinstance(f.dataType, TimestampNTZType)]
-    for c in ntz:
+    for c in layout.ntz:
         df = df.withColumn(c, F.to_timestamp(F.col(c)))
     return df
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Load every testdata table present under ``sf_dir``."""
-    tune(spark)
-    out: dict[str, DataFrame] = {}
-    for name in TABLES:
-        path = table_path(sf_dir, name)
-        if os.path.exists(path):
-            out[name] = _read_table(spark, path)
-    return out
+    return {
+        name: table(spark, sf_dir, name)
+        for name in TABLES
+        if os.path.exists(table_path(sf_dir, name))
+    }
 
 
 def register_views(spark: SparkSession, sf_dir: str, prefix: str = "") -> dict[str, DataFrame]:

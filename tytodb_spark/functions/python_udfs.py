@@ -107,6 +107,9 @@ def doc_terms(spark, docs: DataFrame) -> DataFrame:
     resolved plan and never re-reads the view. A fixed name would let
     two concurrent callers (a multi-query session, the suite's threaded
     sweeps) replace each other's input between create and analysis.
+    This assumes classic PySpark: under Spark Connect ``spark.sql`` is
+    analyzed lazily on the server, so the returned DataFrame would fail
+    once the view is dropped.
     """
     import uuid
 

@@ -40,11 +40,15 @@ def diff_results(spark, oracle_sf_dir):
     import queue as _queue
     import threading
 
-    # 16 threads at the session's local[32] (r12): the fixture measured
-    # 403 s at local[8] (where it is core-bound and thread count barely
-    # moves it), 281 s at local[32]/8 threads, 198 s at local[32]/16 —
-    # submission overlap only pays once the cores exist to absorb it.
-    n_threads = int(os.environ.get("SPARK_GRAFT_DIFF_THREADS", "16"))
+    # Half the session's cores, at least 4 (16 at local[32], r12): the
+    # fixture measured 403 s at local[8] (where it is core-bound and
+    # thread count barely moves it), 281 s at local[32]/8 threads, 198 s
+    # at local[32]/16 — submission overlap only pays once the cores
+    # exist to absorb it.
+    n_threads = int(
+        os.environ.get("SPARK_GRAFT_DIFF_THREADS")
+        or max(4, spark.sparkContext.defaultParallelism // 2)
+    )
     work: _queue.SimpleQueue = _queue.SimpleQueue()
     for name in ORACLE_NAMES:
         work.put(name)

@@ -139,14 +139,17 @@ class checkpoint_scope:
         return False
 
 
-def get_spark(app_name: str = "tytodb_spark", cpus: str | None = None) -> SparkSession:
+def get_spark(
+    app_name: str = "tytodb_spark", cpus: str | None = None, memory: str | None = None
+) -> SparkSession:
     """Build a local session for tests/bench (driver owns its own)."""
     cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS", "*")
+    memory = memory or os.environ.get("TYTO_DRIVER_MEM", "16g")
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", _SHUFFLE_PARTITIONS)
-        .config("spark.driver.memory", os.environ.get("TYTO_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", memory)
         .config("spark.ui.enabled", "false")
         # Progress bars interleave \r-terminated fragments with stdout in
         # captured logs (the round driver keeps a tail of combined output

@@ -16,35 +16,19 @@ SF_ORACLE = os.environ.get(
 )
 
 
-def _box_cpus() -> int:
-    return len(os.sched_getaffinity(0))
-
-
-def _box_heap() -> str:
-    """A quarter of physical memory, 1-16 GB: the JVM heap is one tenant
-    of the test session beside up to one Python worker per core and the
-    DuckDB oracle connections."""
-    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
-    return f"{max(1, min(16, total // 4 // 2**30))}g"
-
-
 @pytest.fixture(scope="session")
 def spark():
-    # Sized from the box. The suite's wall-clock is a gate (the r11
+    # Sized from the box: get_spark's local[*] (or SPARK_GRAFT_CPUS) and
+    # its RAM-sized heap. The suite's wall-clock is a gate (the r11
     # verify pass was killed at ~26% progress), and its biggest block —
     # the 515-query DuckDB differential — is core-bound: measured 403 s
     # at local[8] vs 198 s at local[32] on a 32-core box. On a 4-vCPU,
-    # 16 GB box, local[32] with a 16 GB heap thrashed on memory (up to
-    # one Python worker per slot; an OOM kill) and missed its timeout;
-    # local[4] with a 3 GB heap runs the suite in ~18 min. Nothing in
-    # the suite depends on the core count (partition-invariance is
-    # itself under test); override with SPARK_GRAFT_TEST_CPUS /
-    # TYTO_DRIVER_MEM.
-    spark = get_spark(
-        "tytodb_spark_tests",
-        cpus=os.environ.get("SPARK_GRAFT_TEST_CPUS") or str(_box_cpus()),
-        memory=os.environ.get("TYTO_DRIVER_MEM") or _box_heap(),
-    )
+    # 16 GB box, a fixed local[32] with a 16 GB heap thrashed on memory
+    # (up to one Python worker per slot; an OOM kill) and missed its
+    # timeout. Nothing in the suite depends on the core count
+    # (partition-invariance is itself under test); override with
+    # SPARK_GRAFT_TEST_CPUS / TYTO_DRIVER_MEM.
+    spark = get_spark("tytodb_spark_tests", cpus=os.environ.get("SPARK_GRAFT_TEST_CPUS"))
     yield spark
 
 

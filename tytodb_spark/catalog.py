@@ -11,8 +11,7 @@ index, src/query.rs:234-370, are subsumed by Parquet row-group stats).
 from __future__ import annotations
 
 import os
-import threading
-from collections import OrderedDict
+from functools import lru_cache
 from typing import NamedTuple
 
 import pyarrow.parquet as pq
@@ -48,11 +47,16 @@ class _Layout(NamedTuple):
     ntz: tuple[str, ...]  # read as TIMESTAMP_NTZ
 
 
-# (path, st_mtime_ns, st_size) -> _Layout, least recently used first. The
-# stat fields make a rewritten file a miss, so its schema is inferred again.
-_LAYOUTS: OrderedDict[tuple[str, int, int], _Layout] = OrderedDict()
-_LAYOUTS_MAX = 256
-_LAYOUTS_LOCK = threading.Lock()
+@lru_cache(maxsize=256)
+def _layout(spark: SparkSession, path: str, mtime_ns: int, size: int) -> _Layout:
+    """Infer the file's layout once (one Spark job). The stat fields are in
+    the key so that a rewritten file is a miss and is inferred again."""
+    schema = spark.read.parquet(path).schema
+    return _Layout(
+        schema,
+        tuple(f.name for f in pq.read_schema(path) if str(f.type) == "timestamp[ns]"),
+        tuple(f.name for f in schema.fields if isinstance(f.dataType, TimestampNTZType)),
+    )
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -72,24 +76,8 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     tune(spark)
     path = table_path(sf_dir, name)
     st = os.stat(path)
-    key = (path, st.st_mtime_ns, st.st_size)
-    with _LAYOUTS_LOCK:
-        layout = _LAYOUTS.get(key)
-        if layout is not None:
-            _LAYOUTS.move_to_end(key)
-    if layout is None:
-        df = spark.read.parquet(path)
-        layout = _Layout(
-            df.schema,
-            tuple(f.name for f in pq.read_schema(path) if str(f.type) == "timestamp[ns]"),
-            tuple(f.name for f in df.schema.fields if isinstance(f.dataType, TimestampNTZType)),
-        )
-        with _LAYOUTS_LOCK:
-            _LAYOUTS[key] = layout
-            if len(_LAYOUTS) > _LAYOUTS_MAX:
-                _LAYOUTS.popitem(last=False)
-    else:
-        df = spark.read.schema(layout.schema).parquet(path)
+    layout = _layout(spark, path, st.st_mtime_ns, st.st_size)
+    df = spark.read.schema(layout.schema).parquet(path)
     for c in layout.nanos:
         # integer `div`, not `/`: double division of ~1.7e18 ns loses the
         # low bits (53-bit mantissa) and can round the microsecond up

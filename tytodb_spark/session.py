@@ -139,17 +139,22 @@ class checkpoint_scope:
         return False
 
 
-def get_spark(
-    app_name: str = "tytodb_spark", cpus: str | None = None, memory: str | None = None
-) -> SparkSession:
+def _default_heap() -> str:
+    """A quarter of physical memory, 1-16 GB (16 GB from a 64 GB box up):
+    the driver heap shares a local box with up to one Python worker per
+    core. On a 4-vCPU, 16 GB box a 16 GB heap thrashed the test suite."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, min(16, total // 4 // 2**30))}g"
+
+
+def get_spark(app_name: str = "tytodb_spark", cpus: str | None = None) -> SparkSession:
     """Build a local session for tests/bench (driver owns its own)."""
     cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS", "*")
-    memory = memory or os.environ.get("TYTO_DRIVER_MEM", "16g")
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", _SHUFFLE_PARTITIONS)
-        .config("spark.driver.memory", memory)
+        .config("spark.driver.memory", os.environ.get("TYTO_DRIVER_MEM") or _default_heap())
         .config("spark.ui.enabled", "false")
         # Progress bars interleave \r-terminated fragments with stdout in
         # captured logs (the round driver keeps a tail of combined output

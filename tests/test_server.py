@@ -158,3 +158,23 @@ def test_session_cap_rejects_eleventh(spark, tmp_path):
             c.close()
     finally:
         srv.stop()
+
+
+def test_round_trip_has_no_nagle_stall(server):
+    """A reply is written as headers then body; with Nagle on, the body
+    waits for the client's delayed ACK (~40 ms a statement). A statement
+    that runs no Spark job must come back in a fraction of that."""
+    import socket
+    import statistics
+    import time
+
+    c = _client(server)
+    assert c._conn.sock.getsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY)
+    c.execute("CREATE CONTAINER 'n' [id] [INT]")
+    times = []
+    for _ in range(20):
+        t = time.perf_counter()
+        assert c.execute("ROLLBACK 'n'")["success"] == 1
+        times.append((time.perf_counter() - t) * 1e3)
+    c.close()
+    assert statistics.median(times) < 20, times

@@ -8,17 +8,27 @@ SEARCH compiles to one declarative DataFrame expression
 access-path work the reference hand-rolls (query_type,
 src/query_conditions.rs:495-593): pushdown, pruning, reordering.
 
-Cursor statements (QYCNNXT/QYCNPVS/QYCNEXT, src/query.rs:110-214)
-page a cached result 100 rows at a time (PAGE_SIZE, src/query.rs:9).
+Cursor statements (QYCNNXT/QYCNPVS/QYCNEXT, src/query.rs:110-214) page
+the result 100 rows at a time (PAGE_SIZE, src/query.rs:9). Like the
+reference, a SEARCH materializes its result once: one Spark action
+collects up to CAP + 1 rows, and a result of at most CAP rows is sorted
+on the driver and held by its cursor, so every page is a list slice
+with no Spark job. A larger result pages through a KeysetCursor, one
+distributed top-k per page. At most MAX_CURSORS cursors stay open; the
+least recently used is closed past that.
 """
 
 from __future__ import annotations
 
+import math
+import threading
 import uuid
+from collections import OrderedDict
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from tytodb_spark.aql import ast
 from tytodb_spark.aql.parser import parse
@@ -26,38 +36,46 @@ from tytodb_spark.operators.predicates import compile_chain
 from tytodb_spark.storage.warehouse import Warehouse
 
 PAGE_SIZE = 100  # reference src/query.rs:9
-ROW_NUM = "__tyto_rn"
+#: Largest SEARCH result (100 pages) held on the driver by its cursor.
+CAP = 100 * PAGE_SIZE
+#: Open cursors per engine; each holds at most CAP rows.
+MAX_CURSORS = 32
 
 
 @dataclass
 class Result:
-    """Outcome of one statement. ``df`` is set for row-returning
-    statements; ``query_id`` for SEARCH (cursor handle)."""
+    """Outcome of one statement. ``page`` holds the rows of a
+    row-returning statement; ``query_id`` is set for SEARCH (cursor
+    handle)."""
 
     ok: bool = True
-    df: DataFrame | None = None
+    page: list[Row] | None = None
     query_id: str | None = None
     message: str = ""
 
     def rows(self) -> list[dict]:
-        return [r.asDict(recursive=True) for r in self.df.collect()] if self.df is not None else []
+        return [r.asDict(recursive=True) for r in self.page or []]
 
 
-@dataclass
-class _Cursor:
-    df: DataFrame  # cached, with ROW_NUM column
-    n_rows: int
-    page: int = 0
+def sort_key(schema: T.StructType):
+    """Key function that orders collected rows as Spark's ascending
+    ``orderBy(*columns)`` does: NULL first, NaN after every other
+    number, ``-0.0`` equal to ``0.0``, strings and bytes by their
+    unsigned bytes (Python's code-point order is UTF-8 byte order),
+    arrays element by element, then by length."""
+    cols = [_value_key(f.dataType) for f in schema.fields]
+    return lambda row: tuple(k(v) for k, v in zip(cols, row))
 
-    @property
-    def n_pages(self) -> int:
-        return max(1, -(-self.n_rows // PAGE_SIZE))
 
-    def slice(self) -> DataFrame:
-        lo = self.page * PAGE_SIZE
-        return self.df.filter(
-            (F.col(ROW_NUM) > lo) & (F.col(ROW_NUM) <= lo + PAGE_SIZE)
-        ).drop(ROW_NUM)
+def _value_key(dt: T.DataType):
+    if isinstance(dt, (T.DoubleType, T.FloatType)):
+        inner = lambda v: (1, 0.0) if math.isnan(v) else (0, v)  # noqa: E731
+    elif isinstance(dt, T.ArrayType):  # external tables: embeddings
+        elem = _value_key(dt.elementType)
+        inner = lambda v: [elem(x) for x in v]  # noqa: E731
+    else:
+        inner = lambda v: v  # noqa: E731
+    return lambda v: (0,) if v is None else (1, inner(v))
 
 
 def keyset_page(
@@ -65,57 +83,97 @@ def keyset_page(
     keys: list[str],
     after: tuple | None = None,
     page_size: int = PAGE_SIZE,
+    skip: int = 0,
 ) -> DataFrame:
-    """Seek-based page: ``WHERE (keys...) > after ORDER BY keys LIMIT n``.
+    """Seek-based page: ``WHERE (keys...) >= after ORDER BY keys
+    OFFSET skip LIMIT n``, where ``skip`` counts the rows equal to
+    ``after`` that earlier pages already returned.
 
-    The engine's SCALE path for cursor pagination. The reference
-    materializes the whole result and slices by row number
-    (src/query.rs:110-214), which this engine mirrors in `_run_search`
-    via a row_number window — faithful, but a partition-less Window
-    single-tasks at corpus scale. Keyset pagination compiles each page
-    to a distributed top-k (TakeOrderedAndProject) over a pushed-down
-    composite-key range filter: no Window, no global sort, no cached
-    materialization. ``keys`` must be a UNIQUE composite for
-    deterministic pages (same contract as the row_number spelling).
+    The engine's path for a SEARCH result larger than CAP. Each page
+    compiles to a distributed top-k (TakeOrderedAndProject) over a
+    pushed-down composite-key range filter: no Window, no global sort,
+    no cached materialization. With ``keys`` = all columns, rows equal
+    on every key are identical (up to the sign of a zero), so repeats
+    straddling a page boundary are neither dropped nor doubled.
     """
-    key = F.struct(*[F.col(k) for k in keys])
     if after is not None:
-        df = df.filter(key > F.struct(*[F.lit(v) for v in after]))
-    return df.orderBy(*keys).limit(page_size)
+        types = {f.name: f.dataType for f in df.schema.fields}
+        bound = F.struct(*[F.lit(v).cast(types[k]) for k, v in zip(keys, after)])
+        df = df.filter(F.struct(*[F.col(k) for k in keys]) >= bound)
+    df = df.orderBy(*keys)
+    if skip:
+        df = df.offset(skip)
+    return df.limit(page_size)
 
 
 class KeysetCursor:
     """Forward/backward cursor over ``keyset_page``.
 
-    NEXT seeks past the last key of the current page; PREV re-seeks
+    NEXT seeks from the last key of the current page; PREV re-seeks
     from a stack of page-start boundaries (O(1) bookkeeping, one top-k
-    per move — state is just the boundary keys, never the result set,
-    so a million-page cursor holds a million tuples at most on the
-    driver and nothing on the executors)."""
+    per move — state is just the boundary keys and how many rows equal
+    to each were already returned, never the result set, so a
+    million-page cursor holds a million tuples at most on the driver
+    and nothing on the executors)."""
 
     def __init__(self, df: DataFrame, keys: list[str], page_size: int = PAGE_SIZE):
         self.df = df
         self.keys = keys
         self.page_size = page_size
-        self._starts: list[tuple | None] = [None]  # boundary before page i
+        # (boundary key, rows equal to it already returned) before page i
+        self._starts: list[tuple[tuple | None, int]] = [(None, 0)]
+        self._key = sort_key(df.select(*keys).schema)
 
     @property
     def page(self) -> int:
         return len(self._starts) - 1
 
     def current(self) -> DataFrame:
-        return keyset_page(self.df, self.keys, self._starts[-1], self.page_size)
+        after, skip = self._starts[-1]
+        return keyset_page(self.df, self.keys, after, self.page_size, skip)
 
     def next(self) -> DataFrame:
-        rows = self.current().select(*self.keys).tail(1)
+        rows = [tuple(r) for r in self.current().select(*self.keys).collect()]
         if rows:
-            self._starts.append(tuple(rows[0]))
+            after, skip = self._starts[-1]
+            ks = [self._key(r) for r in rows]
+            same = ks.count(ks[-1])
+            if after is not None and self._key(after) == ks[-1]:
+                same += skip  # the whole page repeats the boundary row
+            self._starts.append((rows[-1], same))
         return self.current()
 
     def prev(self) -> DataFrame:
         if len(self._starts) > 1:
             self._starts.pop()
         return self.current()
+
+
+@dataclass
+class _OpenSearch:
+    """An open SEARCH: its whole result in cursor order (``held``) when
+    it has at most CAP rows, else a KeysetCursor over its DataFrame."""
+
+    n_rows: int
+    held: list[Row] | None = None
+    keyset: KeysetCursor | None = None
+    page: int = 0
+
+    @property
+    def n_pages(self) -> int:
+        return max(1, -(-self.n_rows // PAGE_SIZE))
+
+    def move(self, delta: int) -> list[Row]:
+        """Step ``delta`` pages, clamped to the first and last page, and
+        return the rows of the page landed on."""
+        self.page = min(max(self.page + delta, 0), self.n_pages - 1)
+        if self.held is not None:
+            return self.held[self.page * PAGE_SIZE : (self.page + 1) * PAGE_SIZE]
+        for _ in range(self.page - self.keyset.page):
+            self.keyset.next()
+        for _ in range(self.keyset.page - self.page):
+            self.keyset.prev()
+        return self.keyset.current().collect()
 
 
 class Engine:
@@ -128,7 +186,10 @@ class Engine:
     ):
         self.spark = spark
         self.warehouse = Warehouse(spark, warehouse_dir, external_tables)
-        self._cursors: dict[str, _Cursor] = {}
+        #: open cursors, least recently used first; handler threads of
+        #: the server share them, so every access holds the lock
+        self._cursors: OrderedDict[str, _OpenSearch] = OrderedDict()
+        self._cursors_lock = threading.Lock()
         #: commit immediately after every CREATE ROW, mirroring the
         #: reference's auto-commit connection setting which commits the
         #: insert before returning (src/database.rs:630-633). EDIT and
@@ -201,9 +262,8 @@ class Engine:
         if isinstance(stmt, ast.CursorPrev):
             return self._cursor_move(stmt.query_id, -1)
         if isinstance(stmt, ast.CursorClose):
-            cur = self._cursors.pop(stmt.query_id, None)
-            if cur is not None:
-                cur.df.unpersist()
+            with self._cursors_lock:
+                self._cursors.pop(stmt.query_id, None)
             return Result(message="cursor closed")
         raise ValueError(f"unhandled statement {stmt!r}")
 
@@ -231,18 +291,24 @@ class Engine:
         # Cursor order: all-columns ascending stands in for the reference's
         # storage order (slot order ≈ first-column index order) and makes
         # paging deterministic even with duplicate lead values.
-        numbered = df.withColumn(
-            ROW_NUM, F.row_number().over(W.orderBy(*[F.col(c) for c in df.columns]))
-        ).cache()
-        n = numbered.count()
+        head = df.limit(CAP + 1).collect()
+        if len(head) <= CAP:
+            cur = _OpenSearch(len(head), held=sorted(head, key=sort_key(df.schema)))
+        else:
+            cur = _OpenSearch(df.count(), keyset=KeysetCursor(df, df.columns))
         qid = uuid.uuid4().hex[:16]
-        cur = _Cursor(df=numbered, n_rows=n)
-        self._cursors[qid] = cur
-        return Result(df=cur.slice(), query_id=qid, message=f"{n} rows, {cur.n_pages} pages")
+        with self._cursors_lock:
+            self._cursors[qid] = cur
+            if len(self._cursors) > MAX_CURSORS:
+                self._cursors.popitem(last=False)
+        return Result(page=cur.move(0), query_id=qid, message=f"{cur.n_rows} rows, {cur.n_pages} pages")
 
     def _cursor_move(self, qid: str, delta: int) -> Result:
-        cur = self._cursors.get(qid)
+        with self._cursors_lock:
+            cur = self._cursors.get(qid)
+            if cur is not None:
+                self._cursors.move_to_end(qid)
         if cur is None:
             return Result(ok=False, message=f"no such query {qid!r}")
-        cur.page = min(max(cur.page + delta, 0), cur.n_pages - 1)
-        return Result(df=cur.slice(), query_id=qid, message=f"page {cur.page + 1}/{cur.n_pages}")
+        page = cur.move(delta)
+        return Result(page=page, query_id=qid, message=f"page {cur.page + 1}/{cur.n_pages}")

@@ -37,7 +37,7 @@ def _envelope(res: Result) -> str:
     content: dict = {"message": res.message}
     if res.query_id is not None:
         content["query_id"] = res.query_id
-    if res.df is not None:
+    if res.page is not None:
         content["rows"] = res.rows()
     return json.dumps({"content": content, "success": res.ok}, default=str)
 

@@ -112,6 +112,10 @@ class TytoServer:
 
         class Handler(BaseHTTPRequestHandler):
             protocol_version = "HTTP/1.1"
+            # A reply goes out as two writes (headers, then body); with
+            # Nagle on, the body waits for the client's delayed ACK,
+            # ~40 ms on every statement.
+            disable_nagle_algorithm = True
 
             def _body(self) -> bytes:
                 return self.rfile.read(int(self.headers.get("Content-Length", 0)))
@@ -194,7 +198,7 @@ class TytoServer:
 
 
 def _jsonable_rows(result) -> list[dict] | None:
-    if result.df is None:
+    if result.page is None:
         return None
     out = []
     for row in result.rows():
@@ -208,7 +212,9 @@ def _jsonable_rows(result) -> list[dict] | None:
 
 
 class TytoClient:
-    """Minimal client: handshake once, then encrypted execute()."""
+    """Minimal client: handshake once, then encrypted execute().
+    ``http.client`` sets TCP_NODELAY on every socket it connects, and
+    sends a request's headers and body in one write."""
 
     def __init__(self, host: str, port: int, secret_key: bytes):
         import http.client

@@ -1,6 +1,6 @@
 """Cursor tests: the driver-side cursor order against Spark's
-``orderBy``, keyset paging over repeated rows, the bounded cursor map,
-and cursors that outlive their snapshot."""
+``orderBy``, keyset paging over repeated rows, the byte budget of held
+rows, the bounded cursor map, and cursors that outlive their snapshot."""
 
 import math
 import random
@@ -11,7 +11,7 @@ from hypothesis import strategies as st
 from pyspark.sql import types as T
 
 from tytodb_spark import engine as engine_mod
-from tytodb_spark.engine import MAX_CURSORS, PAGE_SIZE, Engine, sort_key
+from tytodb_spark.engine import HELD_BYTES, MAX_CURSORS, PAGE_SIZE, Engine, sort_key, value_bytes
 
 
 @pytest.fixture()
@@ -154,6 +154,50 @@ def test_search_larger_than_cap_pages_through_keyset(spark, engine, monkeypatch)
     assert [r["id"] for _, rows in held[:3] for r in rows] == ids
 
 
+# -- the byte budget of held rows ---------------------------------------------
+
+
+def _replies(engine, search):
+    res = engine.execute(search)
+    out = [(res.message, res.rows())]
+    for move in ("QYCNNXT", "QYCNNXT", "QYCNNXT", "QYCNPVS", "QYCNPVS"):
+        r = engine.execute(f"{move} '{res.query_id}'")
+        out.append((r.message, r.rows()))
+    return res.query_id, out
+
+
+def test_large_bytes_search_pages_through_keyset(spark, engine):
+    """LARGE-BYTES values take up to 1 MB each, so far fewer than CAP
+    rows fit the held budget: a 250-row SEARCH pages through the keyset
+    cursor."""
+    fits = HELD_BYTES // value_bytes(T.BinaryType(), 1_000_000)
+    assert fits < 250
+    engine.execute("CREATE CONTAINER 'blobs' [id, b] [INT, LARGE-BYTES]")
+    rows = [(i, bytes([i % 256]) * (1_000_000 if i % 100 == 0 else 3)) for i in range(250)]
+    engine.warehouse.append_df("blobs", spark.createDataFrame(rows, "id int, b binary"))
+    qid, out = _replies(engine, "SEARCH ON 'blobs'")
+    assert engine._cursors[qid].keyset is not None
+    assert [m for m, _ in out] == ["250 rows, 3 pages", "page 2/3", "page 3/3", "page 3/3", "page 2/3", "page 1/3"]
+    got = [(r["id"], bytes(r["b"])) for _, page in out[:3] for r in page]
+    assert got == rows
+
+
+def test_unbounded_column_is_measured(spark, engine, monkeypatch):
+    """A TEXT column has no declared width: the SEARCH sizes its rows
+    and holds them when they fit, else pages through the keyset cursor
+    with the same replies."""
+    engine.execute("CREATE CONTAINER 'notes' [id, t] [INT, TEXT]")
+    rows = [(i, "é" * (i % 7)) for i in range(250)]
+    engine.warehouse.append_df("notes", spark.createDataFrame(rows, "id int, t string"))
+    qid, held = _replies(engine, "SEARCH ON 'notes'")
+    assert engine._cursors[qid].held is not None
+    monkeypatch.setattr(engine_mod, "HELD_BYTES", 10_000)
+    qid, paged = _replies(engine, "SEARCH ON 'notes'")
+    assert engine._cursors[qid].keyset is not None
+    assert paged == held
+    assert [(r["id"], r["t"]) for _, page in held[:3] for r in page] == rows
+
+
 # -- cursor lifetime ----------------------------------------------------------
 
 
@@ -192,3 +236,47 @@ def test_cursor_outlives_retired_snapshot(engine):
     assert second == list(range(PAGE_SIZE, 2 * PAGE_SIZE))
     back = [r["id"] for r in engine.execute(f"QYCNPVS '{res.query_id}'").rows()]
     assert back == first == list(range(PAGE_SIZE))
+
+
+def test_keyset_cursor_outlives_retired_snapshot(engine, monkeypatch):
+    """A cursor past CAP pins the snapshot it pages: two COMMITs do not
+    retire it, its pages are the original ones, and closing the cursor
+    retires it."""
+    monkeypatch.setattr(engine_mod, "CAP", 150)
+    engine.execute("CREATE CONTAINER 'nums' [id] [INT]")
+    for i in range(250):
+        engine.execute(f"CREATE ROW [id] [{i}] ON 'nums'")
+    engine.execute("COMMIT 'nums'")
+    opened = engine.warehouse._current_version("nums")
+    res = engine.execute("SEARCH ON 'nums'")
+    assert engine._cursors[res.query_id].keyset is not None
+    for i in (1000, 1001):
+        engine.execute(f"DELETE ROW ON 'nums' WHERE id < {PAGE_SIZE + 10}")
+        engine.execute(f"CREATE ROW [id] [{i}] ON 'nums'")
+        engine.execute("COMMIT 'nums'")
+    assert opened in engine.warehouse.versions("nums")
+    second = [r["id"] for r in engine.execute(f"QYCNNXT '{res.query_id}'").rows()]
+    assert second == list(range(PAGE_SIZE, 2 * PAGE_SIZE))
+    back = [r["id"] for r in engine.execute(f"QYCNPVS '{res.query_id}'").rows()]
+    assert back == [r["id"] for r in res.rows()] == list(range(PAGE_SIZE))
+    engine.execute(f"QYCNEXT '{res.query_id}'")
+    assert opened not in engine.warehouse.versions("nums")
+
+
+def test_evicted_keyset_cursor_releases_its_snapshot(engine, monkeypatch):
+    monkeypatch.setattr(engine_mod, "CAP", 1)
+    engine.execute("CREATE CONTAINER 'two' [id] [INT]")
+    for i in range(2):
+        engine.execute(f"CREATE ROW [id] [{i}] ON 'two'")
+    engine.execute("COMMIT 'two'")
+    opened = engine.warehouse._current_version("two")
+    first = engine.execute("SEARCH ON 'two'").query_id
+    for i in (2, 3):
+        engine.execute(f"CREATE ROW [id] [{i}] ON 'two'")
+        engine.execute("COMMIT 'two'")
+    assert opened in engine.warehouse.versions("two")
+    monkeypatch.setattr(engine_mod, "CAP", 100)  # the rest are held
+    for _ in range(MAX_CURSORS):
+        engine.execute("SEARCH ON 'two'")
+    assert not engine.execute(f"QYCNNXT '{first}'").ok
+    assert opened not in engine.warehouse.versions("two")

@@ -22,7 +22,9 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import threading
 import uuid
+from collections import Counter
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -67,6 +69,9 @@ class Warehouse:
         self.root = root
         self.external = external_tables or {}
         self._state: dict[str, _TableState] = {}
+        #: (container, version) → open readers that still page it
+        self._pins: Counter[tuple[str, int]] = Counter()
+        self._pins_lock = threading.Lock()
         os.makedirs(root, exist_ok=True)
         for name in os.listdir(root):
             if os.path.isfile(self._schema_path(name)):
@@ -94,6 +99,16 @@ class Warehouse:
             dt, _cap = ALBA_TYPES[alba]
             fields.append(T.StructField(col, dt, True))
         return T.StructType(fields)
+
+    def declared(self, name: str) -> list[tuple[str, T.DataType, int | None]]:
+        """(column, Spark type, declared ALBA size or None) of a
+        container or external table; an external column has no declared
+        size."""
+        if name in self._state:
+            return [(c, *ALBA_TYPES[alba]) for c, alba in self._state[name].schema]
+        if name in self.external:
+            return [(f.name, f.dataType, None) for f in self.external[name].schema.fields]
+        raise KeyError(f"no such container {name!r}")
 
     def exists(self, name: str) -> bool:
         return name in self._state
@@ -129,15 +144,16 @@ class Warehouse:
         shutil.rmtree(self._dir(name), ignore_errors=True)
 
     # -- reads ---------------------------------------------------------------
-    def read_committed(self, name: str) -> DataFrame:
-        v = self._current_version(name)
+    def read_committed(self, name: str, version: int | None = None) -> DataFrame:
+        v = self._current_version(name) if version is None else version
         return self.spark.read.schema(self.spark_schema(name)).parquet(
             self._snapshot_path(name, v)
         )
 
     def versions(self, name: str) -> list[int]:
         """Snapshot versions still on disk (current + the retained
-        previous — SURVEY §4.3 keeps one back for readers mid-flight)."""
+        previous — SURVEY §4.3 keeps one back for readers mid-flight —
+        and any older one still pinned)."""
         if name not in self._state:
             raise KeyError(f"no such container {name!r}")
         return sorted(
@@ -166,15 +182,47 @@ class Warehouse:
             self.spark.sparkContext.parallelize(data, 1), schema
         )
 
-    def read(self, name: str) -> DataFrame:
+    def pin(self, name: str) -> int:
+        """Pin the current snapshot of a container and return its
+        version: COMMITs do not retire it until ``unpin``, so a reader
+        that keeps going back to it (a keyset cursor) still finds it."""
+        with self._pins_lock:
+            v = self._current_version(name)
+            self._pins[(name, v)] += 1
+            return v
+
+    def unpin(self, pins: dict[str, int]) -> None:
+        """Release pins (container → version) taken by ``pin`` and retire
+        what they alone kept."""
+        with self._pins_lock:
+            for name, v in pins.items():
+                self._pins[(name, v)] -= 1
+                if self._pins[(name, v)] <= 0:
+                    del self._pins[(name, v)]
+                if name in self._state:
+                    self._retire(name)
+
+    def _retire(self, name: str) -> None:
+        """Remove snapshots older than the previous one and not pinned
+        (caller holds the pin lock)."""
+        current = self._current_version(name)
+        for entry in os.listdir(self._dir(name)):
+            if entry.startswith("v_"):
+                v = int(entry[2:])
+                if v < current - 1 and (name, v) not in self._pins:
+                    shutil.rmtree(os.path.join(self._dir(name), entry), ignore_errors=True)
+
+    def read(self, name: str, version: int | None = None) -> DataFrame:
         """Committed snapshot + staged-op overlay (MVCC-buffer read).
+        ``version`` picks a retained snapshot of a container (default
+        the current one).
 
         Adjacent staged inserts are batched into ONE single-slice
         DataFrame: a commit after N row inserts would otherwise union N
         separate createDataFrame plans. Ordering across insert/edit/delete
         boundaries is preserved — only runs of consecutive inserts merge."""
         if name in self._state:
-            df = self.read_committed(name)
+            df = self.read_committed(name, version)
             pending: list[dict] = []
 
             def flush(d: DataFrame) -> DataFrame:
@@ -295,9 +343,8 @@ class Warehouse:
             f.write(str(version))
         os.rename(tmp, os.path.join(self._dir(name), CURRENT))
         # retire older snapshots (keep previous for readers mid-flight)
-        for entry in os.listdir(self._dir(name)):
-            if entry.startswith("v_") and int(entry[2:]) < version - 1:
-                shutil.rmtree(os.path.join(self._dir(name), entry), ignore_errors=True)
+        with self._pins_lock:
+            self._retire(name)
 
     def commit(self, name: str | None = None) -> None:
         names = [name] if name else [n for n, st in self._state.items() if st.ops]

@@ -191,6 +191,9 @@ def test_unbounded_column_is_measured(spark, engine, monkeypatch):
     engine.warehouse.append_df("notes", spark.createDataFrame(rows, "id int, t string"))
     qid, held = _replies(engine, "SEARCH ON 'notes'")
     assert engine._cursors[qid].held is not None
+    empty = engine.execute("SEARCH ON 'notes' WHERE id < 0")
+    assert empty.message == "0 rows, 1 pages"
+    assert engine._cursors[empty.query_id].held == []
     monkeypatch.setattr(engine_mod, "HELD_BYTES", 10_000)
     qid, paged = _replies(engine, "SEARCH ON 'notes'")
     assert engine._cursors[qid].keyset is not None

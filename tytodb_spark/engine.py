@@ -390,8 +390,8 @@ class Engine:
     def _held_cap(self, stmt: ast.Search, df: DataFrame) -> int:
         """Most rows of this SEARCH's result its cursor may hold: CAP,
         or fewer where HELD_BYTES runs out first. With an unbounded
-        column, one Spark job sizes the first CAP + 1 rows: all of them
-        when they fit, else none."""
+        column, one Spark job sizes the first CAP + 1 rows: CAP when
+        they fit, else none."""
         widths = self._declared_bytes(stmt)
         if None not in widths.values():
             return min(CAP, HELD_BYTES // (_ROW_BYTES + sum(widths.values())))
@@ -400,7 +400,7 @@ class Engine:
             F.lit(_ROW_BYTES),
         )
         n, total = df.limit(CAP + 1).agg(F.count(F.lit(1)), F.sum(size)).first()
-        return n if n <= CAP and (total or 0) <= HELD_BYTES else 0
+        return CAP if n <= CAP and (total or 0) <= HELD_BYTES else 0
 
     def _run_search(self, stmt: ast.Search) -> Result:
         pins: dict[str, int] = {}

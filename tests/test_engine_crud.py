@@ -265,3 +265,43 @@ def test_max_columns_cap(engine):
     types51 = ", ".join("INT" for _ in range(51))
     with pytest.raises(ValueError, match="max_columns"):
         engine.execute(f"CREATE CONTAINER 'wide51' [{cols51}] [{types51}]")
+
+
+def test_statements_compile_no_code(spark, engine):
+    """SEARCHes and COMMITs with values not seen before compile no Java:
+    the engine's session evaluates expressions interpreted (Spark would
+    inline each literal into newly generated classes), and the caller's
+    session keeps its own settings."""
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    engine.execute("CREATE CONTAINER 'n' [id, a] [BIGINT, INT]")
+    for i in range(6):
+        engine.execute("CREATE ROW [id, a] [?, ?] ON 'n'", [str(i), str(i * 7)])
+    engine.execute("COMMIT 'n'")
+    before = compiles.getCount()
+    for k in (1, 2, 3):
+        got = engine.execute("SEARCH ON 'n' WHERE id = ? OR a > ?", [str(k), str(20 + k)]).rows()
+        assert got == [{"id": i, "a": i * 7} for i in range(6) if i == k or i * 7 > 20 + k]
+    engine.execute("EDIT ROW [a] [?] ON 'n' WHERE id = ?", ["99", "4"])
+    engine.execute("DELETE ROW ON 'n' WHERE id = ?", ["5"])
+    engine.execute("COMMIT 'n'")
+    assert engine.execute("SEARCH ON 'n' WHERE a > ?", ["30"]).rows() == [{"id": 4, "a": 99}]
+    assert compiles.getCount() == before
+    assert engine.spark is not spark
+    assert spark.conf.get("spark.sql.codegen.wholeStage") == "true"
+
+
+def test_snapshot_dataframe_reused_per_version(engine):
+    """A committed snapshot's DataFrame is built once per version; a
+    COMMIT, or a container dropped and created again, reads anew."""
+    wh = engine.warehouse
+    wh.create_table("t", [("k", "INT")])
+    first = wh.read_committed("t")
+    assert wh.read_committed("t") is first
+    wh.stage_insert("t", ["k"], [1])
+    wh.commit("t")
+    assert wh.read_committed("t") is not first
+    assert [r.k for r in wh.read_committed("t").collect()] == [1]
+    assert wh.read_version("t", 0).count() == 0
+    wh.drop_table("t")
+    wh.create_table("t", [("k", "INT")])
+    assert wh.read_committed("t").count() == 0

@@ -7,6 +7,9 @@ SEARCH compiles to one declarative DataFrame expression
 (select → filter → unionByName over sources) and Catalyst does the
 access-path work the reference hand-rolls (query_type,
 src/query_conditions.rs:495-593): pushdown, pruning, reordering.
+Statements run in the engine's own session (session.statement_session),
+which evaluates expressions without generating code: a statement's
+literals would otherwise make Spark compile new classes for each one.
 
 Cursor statements (QYCNNXT/QYCNPVS/QYCNEXT, src/query.rs:110-214) page
 the result 100 rows at a time (PAGE_SIZE, src/query.rs:9). Like the
@@ -38,6 +41,7 @@ from pyspark.sql import types as T
 from tytodb_spark.aql import ast
 from tytodb_spark.aql.parser import parse
 from tytodb_spark.operators.predicates import compile_chain
+from tytodb_spark.session import statement_session
 from tytodb_spark.storage.warehouse import Warehouse
 
 PAGE_SIZE = 100  # reference src/query.rs:9
@@ -256,8 +260,8 @@ class Engine:
         external_tables: dict[str, DataFrame] | None = None,
         auto_commit: bool = False,
     ):
-        self.spark = spark
-        self.warehouse = Warehouse(spark, warehouse_dir, external_tables)
+        self.spark = statement_session(spark)
+        self.warehouse = Warehouse(self.spark, warehouse_dir, external_tables)
         #: open cursors, least recently used first; handler threads of
         #: the server share them, so every access holds the lock
         self._cursors: OrderedDict[str, _OpenSearch] = OrderedDict()

@@ -72,6 +72,8 @@ class Warehouse:
         #: (container, version) → open readers that still page it
         self._pins: Counter[tuple[str, int]] = Counter()
         self._pins_lock = threading.Lock()
+        #: (container, version) → (inode of its snapshot dir, DataFrame)
+        self._snapshots: dict[tuple[str, int], tuple[int, DataFrame]] = {}
         os.makedirs(root, exist_ok=True)
         for name in os.listdir(root):
             if os.path.isfile(self._schema_path(name)):
@@ -142,13 +144,29 @@ class Warehouse:
             raise ValueError(f"no such container {name!r}")
         del self._state[name]
         shutil.rmtree(self._dir(name), ignore_errors=True)
+        for key in list(self._snapshots):
+            if key[0] == name:
+                self._snapshots.pop(key, None)
 
     # -- reads ---------------------------------------------------------------
     def read_committed(self, name: str, version: int | None = None) -> DataFrame:
+        """A committed snapshot. A snapshot directory never changes once
+        renamed into place, so its DataFrame (resolved relation and file
+        listing) is built once and reused while the directory lives; the
+        inode tells a directory apart from a later one of the same name
+        (a container dropped and created again)."""
         v = self._current_version(name) if version is None else version
-        return self.spark.read.schema(self.spark_schema(name)).parquet(
-            self._snapshot_path(name, v)
-        )
+        path = self._snapshot_path(name, v)
+        try:
+            ino = os.stat(path).st_ino
+        except OSError:  # Spark reports the missing path
+            return self.spark.read.schema(self.spark_schema(name)).parquet(path)
+        hit = self._snapshots.get((name, v))
+        if hit is not None and hit[0] == ino:
+            return hit[1]
+        df = self.spark.read.schema(self.spark_schema(name)).parquet(path)
+        self._snapshots[(name, v)] = (ino, df)
+        return df
 
     def versions(self, name: str) -> list[int]:
         """Snapshot versions still on disk (current + the retained
@@ -165,9 +183,7 @@ class Warehouse:
         chain is the same mechanism Delta/Iceberg expose as AS OF)."""
         if version not in self.versions(name):
             raise KeyError(f"{name!r} has no retained snapshot v{version}")
-        return self.spark.read.schema(self.spark_schema(name)).parquet(
-            self._snapshot_path(name, version)
-        )
+        return self.read_committed(name, version)
 
     def _local_df(self, name: str, rows: list[dict]) -> DataFrame:
         """Rows → ONE-slice DataFrame. ``createDataFrame(list)`` parallelizes
@@ -211,6 +227,7 @@ class Warehouse:
                 v = int(entry[2:])
                 if v < current - 1 and (name, v) not in self._pins:
                     shutil.rmtree(os.path.join(self._dir(name), entry), ignore_errors=True)
+                    self._snapshots.pop((name, v), None)
 
     def read(self, name: str, version: int | None = None) -> DataFrame:
         """Committed snapshot + staged-op overlay (MVCC-buffer read).

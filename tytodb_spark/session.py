@@ -49,6 +49,13 @@ _RUNTIME_CONF = {
 _STATEMENT_CONF = {
     "spark.sql.codegen.wholeStage": "false",
     "spark.sql.codegen.factoryMode": "NO_CODEGEN",
+    # A SEARCH collects limit(n): with one initial partition, Spark
+    # scans one and then the rest in a second job, so a SEARCH over
+    # several files or sources ran 2 jobs. Up to 8 partitions now go in
+    # the first job; each may return n rows, and n rows of a held result
+    # take at most engine.HELD_BYTES, so one SEARCH takes in at most
+    # 8 x HELD_BYTES (128 MB) on the driver.
+    "spark.sql.limit.initialNumPartitions": "8",
 }
 
 

@@ -1,40 +1,99 @@
-"""Warehouse: mutable-table semantics over immutable Parquet snapshots.
+"""Warehouse: mutable-table semantics over immutable Parquet files.
 
 Reproduces the reference's transactional surface (SURVEY §2.5):
 - MVCC write buffer → an in-memory, per-table op log (inserts / edits /
   deletes) overlaid on the committed snapshot at read time (reference
   overlays its buffer over the file in get_rows, src/container.rs:354-363).
-- COMMIT → materialize overlay, write a NEW snapshot directory, atomically
-  flip a CURRENT pointer (replaces write_all_at + strix checksum daemon +
-  graveyard slot reuse, src/container.rs:248-342 / src/strix.rs:18-56 —
-  Parquet page checksums + atomic rename make those obsolete, SURVEY §4.3).
+- COMMIT → write only what changed as new Parquet files, then atomically
+  flip a CURRENT pointer to a new snapshot manifest (the reference writes
+  the buffered rows into their slots, src/container.rs:248-342; Parquet
+  page checksums + atomic rename replace its strix checksum daemon and
+  graveyard slot reuse, src/strix.rs:18-56, SURVEY §4.3).
 - ROLLBACK → drop the op log (src/container.rs:241-247).
 - Per-table (not cross-table) atomicity, matching the reference
   (Database::commit loops containers independently, src/database.rs:252-261).
 
-Scale: snapshots are plain Parquet dirs — on a cluster this is the same
-copy-on-write pattern Delta/Iceberg formalize; reads stay pushdown-able
-and partition-prunable, writes are append-only files + one pointer flip.
+On disk a container is a directory::
+
+    schema.json   column names and ALBA types
+    CURRENT       the committed version n
+    v_<k>/        the Parquet files commit k wrote, plus its manifest
+                  (manifest.json) while version k is retained
+
+A snapshot is its manifest: the list of every file it holds, each
+stored in some ``v_k/``, and the count of files appended since the
+last rewrite. What a COMMIT writes depends on what it holds:
+- only inserts (auto-commit CREATE ROW included): the staged rows are
+  on the driver already, so pyarrow writes them as ONE file and the new
+  manifest is the old one plus that file. No Spark job (a Spark write
+  of the same rows pays a job, a task and a Python-worker round trip,
+  hundreds of milliseconds for a few rows). The commit that
+  would append past MAX_APPENDED_FILES rewrites instead, so the file
+  list stays bounded.
+- any edit or delete: one Spark job rewrites the overlay (committed
+  files + staged ops) into new files, one file for a small table; this
+  also folds in the files earlier insert commits appended.
+``append_df`` writes a batch's files with Spark next to the old ones;
+``compact`` rewrites to target-sized files.
+
+Every commit writes into a ``_staged_*`` directory, puts the manifest
+there, renames it to ``v_<n>`` (the rename fails when n is taken) and
+flips CURRENT last (write-temp + rename); a commit that raises removes
+what it wrote. Opening a Warehouse removes what a crash left behind:
+``_staged_*``, CURRENT temp files and any ``v_k`` above CURRENT. A
+manifest is retired once it is older than the previous version and no
+reader pins it; a ``v_k`` directory goes once no retained manifest
+lists a file in it. One lock per container serialises staging, the
+op-list read of ``read``, COMMIT and ROLLBACK.
+
+Scale: this is the copy-on-write pattern Delta/Iceberg formalize (a
+manifest of immutable files, swapped atomically); reads stay
+pushdown-able and partition-prunable, writes are new files + one
+pointer flip.
 """
 
 from __future__ import annotations
 
+import base64
 import json
+import math
 import os
 import shutil
 import threading
 import uuid
 from collections import Counter
+from collections.abc import Callable
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from tytodb_spark.functions.tyto import ALBA_TYPES, coerce, zero_default
+from tytodb_spark.functions.tyto import ALBA_TYPES, zero_default
 from tytodb_spark.operators.predicates import compile_chain
 
 CURRENT = "CURRENT"
+MANIFEST = "manifest.json"
+#: Most files insert-only commits and ``append_df`` add to a snapshot
+#: between two rewrites. Spark lists more than 32 input paths with a
+#: job of its own (parallelPartitionDiscovery.threshold), and every file
+#: costs a SEARCH an open and a footer read.
+MAX_APPENDED_FILES = 16
+
+# Arrow type of each Spark type an ALBA type maps to (ALBA_TYPES).
+_ARROW_TYPES = {
+    "integer": pa.int32(),
+    "long": pa.int64(),
+    "double": pa.float64(),
+    "boolean": pa.bool_(),
+    "string": pa.string(),
+    "binary": pa.binary(),
+    "void": pa.null(),
+}
+_INT_BITS = {"INT": 32, "BIGINT": 64}
 
 
 @dataclass
@@ -49,6 +108,37 @@ class _Op:
 class _TableState:
     schema: list[tuple[str, str]]  # (col, ALBA type)
     ops: list[_Op] = field(default_factory=list)
+    lock: threading.RLock = field(default_factory=threading.RLock)
+
+
+@dataclass(frozen=True)
+class _Manifest:
+    files: tuple[str, ...] = ()  # "v_<k>/<file>", relative to the container dir
+    appended: int = 0  # files added since the last rewrite
+
+
+def _exact_int(value: object) -> int:
+    """An integer literal parsed exactly; only a real float truncates
+    toward zero, NaN and infinities refused (src/alba_types.rs:146-151).
+    ``int(float(v))`` would round 9007199254740993 to ...992."""
+    if isinstance(value, int):
+        return int(value)
+    if isinstance(value, float):
+        f = value
+    else:
+        s = str(value).strip()
+        try:
+            return int(s)
+        except ValueError:
+            f = float(s)
+    if not math.isfinite(f):
+        raise ValueError(f"cannot coerce {value!r} to an integer")
+    return int(f)
+
+
+def _parquet_files(path: str) -> list[str]:
+    """The data files Spark wrote to ``path`` (no markers, no checksums)."""
+    return sorted(f for f in os.listdir(path) if f.endswith(".parquet") and f[0] not in "._")
 
 
 class Warehouse:
@@ -72,13 +162,14 @@ class Warehouse:
         #: (container, version) → open readers that still page it
         self._pins: Counter[tuple[str, int]] = Counter()
         self._pins_lock = threading.Lock()
-        #: (container, version) → (inode of its snapshot dir, DataFrame)
+        #: (container, version) → (inode of its manifest, DataFrame)
         self._snapshots: dict[tuple[str, int], tuple[int, DataFrame]] = {}
         os.makedirs(root, exist_ok=True)
         for name in os.listdir(root):
             if os.path.isfile(self._schema_path(name)):
                 with open(self._schema_path(name)) as f:
                     self._state[name] = _TableState(schema=[tuple(c) for c in json.load(f)])
+                self._recover(name)
 
     # -- paths ------------------------------------------------------------
     def _dir(self, name: str) -> str:
@@ -93,6 +184,11 @@ class Warehouse:
 
     def _snapshot_path(self, name: str, version: int) -> str:
         return os.path.join(self._dir(name), f"v_{version}")
+
+    def _manifest(self, name: str, version: int) -> _Manifest:
+        with open(os.path.join(self._snapshot_path(name, version), MANIFEST)) as f:
+            m = json.load(f)
+        return _Manifest(tuple(m["files"]), m["appended"])
 
     # -- schema helpers ----------------------------------------------------
     def spark_schema(self, name: str) -> T.StructType:
@@ -125,58 +221,73 @@ class Warehouse:
 
     # -- DDL ----------------------------------------------------------------
     def create_table(self, name: str, schema: list[tuple[str, str]]) -> None:
-        if name in self._state or name in self.external:
+        if name in self._state or name in self.external or os.path.isfile(self._schema_path(name)):
             raise ValueError(f"container {name!r} already exists")
         if len(schema) > self.MAX_COLUMNS:
             raise ValueError(
                 f"container {name!r} declares {len(schema)} columns; "
                 f"max_columns is {self.MAX_COLUMNS}"
             )
-        self._state[name] = _TableState(schema=schema)
-        os.makedirs(self._dir(name), exist_ok=True)
-        with open(self._schema_path(name), "w") as f:
+        # schema.json is written last: a directory without one is what a
+        # create cut short left behind
+        shutil.rmtree(self._dir(name), ignore_errors=True)
+        os.makedirs(self._dir(name))
+
+        def no_files(staged: str) -> list[str]:
+            os.makedirs(staged)
+            return []
+
+        self._write_snapshot(name, 0, no_files)
+        tmp = self._schema_path(name) + f".tmp_{uuid.uuid4().hex}"
+        with open(tmp, "w") as f:
             json.dump(schema, f)
-        empty = self.spark.createDataFrame([], self.spark_schema(name))
-        self._write_snapshot(name, empty, version=0)
+        os.replace(tmp, self._schema_path(name))
+        self._state[name] = _TableState(schema=schema)
 
     def drop_table(self, name: str) -> None:
-        if name not in self._state:
+        st = self._state.get(name)
+        if st is None:
             raise ValueError(f"no such container {name!r}")
-        del self._state[name]
-        shutil.rmtree(self._dir(name), ignore_errors=True)
+        with st.lock:
+            del self._state[name]
+            shutil.rmtree(self._dir(name), ignore_errors=True)
         for key in list(self._snapshots):
             if key[0] == name:
                 self._snapshots.pop(key, None)
 
     # -- reads ---------------------------------------------------------------
     def read_committed(self, name: str, version: int | None = None) -> DataFrame:
-        """A committed snapshot. A snapshot directory never changes once
-        renamed into place, so its DataFrame (resolved relation and file
-        listing) is built once and reused while the directory lives; the
-        inode tells a directory apart from a later one of the same name
-        (a container dropped and created again)."""
+        """A committed snapshot: exactly the files its manifest lists. A
+        manifest never changes once renamed into place, so its DataFrame
+        (resolved relation and file listing) is built once and reused
+        while the manifest lives; the inode tells a manifest apart from
+        a later one of the same version (a container dropped and created
+        again)."""
         v = self._current_version(name) if version is None else version
-        path = self._snapshot_path(name, v)
-        try:
-            ino = os.stat(path).st_ino
-        except OSError:  # Spark reports the missing path
-            return self.spark.read.schema(self.spark_schema(name)).parquet(path)
+        ino = os.stat(os.path.join(self._snapshot_path(name, v), MANIFEST)).st_ino
         hit = self._snapshots.get((name, v))
         if hit is not None and hit[0] == ino:
             return hit[1]
-        df = self.spark.read.schema(self.spark_schema(name)).parquet(path)
+        paths = [os.path.join(self._dir(name), f) for f in self._manifest(name, v).files]
+        df = self.spark.read.schema(self.spark_schema(name)).parquet(*paths)
         self._snapshots[(name, v)] = (ino, df)
         return df
 
+    def _versions(self, name: str) -> list[int]:
+        d = self._dir(name)
+        return sorted(
+            int(e[2:])
+            for e in os.listdir(d)
+            if e.startswith("v_") and os.path.isfile(os.path.join(d, e, MANIFEST))
+        )
+
     def versions(self, name: str) -> list[int]:
-        """Snapshot versions still on disk (current + the retained
+        """Snapshot versions whose manifest is retained (current + the
         previous — SURVEY §4.3 keeps one back for readers mid-flight —
         and any older one still pinned)."""
         if name not in self._state:
             raise KeyError(f"no such container {name!r}")
-        return sorted(
-            int(e[2:]) for e in os.listdir(self._dir(name)) if e.startswith("v_")
-        )
+        return self._versions(name)
 
     def read_version(self, name: str, version: int) -> DataFrame:
         """Time-travel read of a retained snapshot version (the snapshot
@@ -219,49 +330,80 @@ class Warehouse:
                     self._retire(name)
 
     def _retire(self, name: str) -> None:
-        """Remove snapshots older than the previous one and not pinned
-        (caller holds the pin lock)."""
+        """Remove the manifests older than the previous version and not
+        pinned, then every ``v_k`` directory below CURRENT that no
+        retained manifest lists a file in (caller holds the pin lock)."""
+        d = self._dir(name)
         current = self._current_version(name)
-        for entry in os.listdir(self._dir(name)):
-            if entry.startswith("v_"):
-                v = int(entry[2:])
-                if v < current - 1 and (name, v) not in self._pins:
-                    shutil.rmtree(os.path.join(self._dir(name), entry), ignore_errors=True)
-                    self._snapshots.pop((name, v), None)
+        live: set[str] = set()
+        for v in self._versions(name):
+            if v >= current - 1 or (name, v) in self._pins:
+                live.add(f"v_{v}")
+                live.update(f.split("/", 1)[0] for f in self._manifest(name, v).files)
+            else:
+                os.remove(os.path.join(d, f"v_{v}", MANIFEST))
+                self._snapshots.pop((name, v), None)
+        for entry in os.listdir(d):
+            if entry.startswith("v_") and entry not in live and int(entry[2:]) < current:
+                shutil.rmtree(os.path.join(d, entry), ignore_errors=True)
+
+    def _recover(self, name: str) -> None:
+        """Remove what a commit cut short left behind: staged
+        directories, CURRENT temp files and snapshots above CURRENT. A
+        current snapshot written before manifests (a bare directory of
+        Parquet files) gets one listing its files."""
+        d = self._dir(name)
+        current = self._current_version(name)
+        snapshot = self._snapshot_path(name, current)
+        if not os.path.isfile(os.path.join(snapshot, MANIFEST)):
+            files = tuple(f"v_{current}/{f}" for f in _parquet_files(snapshot))
+            self._write_manifest(snapshot, _Manifest(files))
+        for entry in os.listdir(d):
+            path = os.path.join(d, entry)
+            if entry.startswith("_staged_") or (entry.startswith("v_") and int(entry[2:]) > current):
+                shutil.rmtree(path, ignore_errors=True)
+            elif entry.startswith(".current_"):
+                os.remove(path)
+        with self._pins_lock:
+            self._retire(name)
 
     def read(self, name: str, version: int | None = None) -> DataFrame:
         """Committed snapshot + staged-op overlay (MVCC-buffer read).
         ``version`` picks a retained snapshot of a container (default
-        the current one).
-
-        Adjacent staged inserts are batched into ONE single-slice
-        DataFrame: a commit after N row inserts would otherwise union N
-        separate createDataFrame plans. Ordering across insert/edit/delete
-        boundaries is preserved — only runs of consecutive inserts merge."""
+        the current one)."""
         if name in self._state:
-            df = self.read_committed(name, version)
-            pending: list[dict] = []
-
-            def flush(d: DataFrame) -> DataFrame:
-                if not pending:
-                    return d
-                new = self._local_df(name, pending)
-                pending.clear()
-                return d.unionByName(new)
-
-            for op in self._state[name].ops:
-                if op.kind == "insert":
-                    pending.extend(op.rows)
-                else:
-                    df = self._apply_op(name, flush(df), op)
-            return flush(df)
+            st = self._state[name]
+            with st.lock:
+                df = self.read_committed(name, version)
+                ops = list(st.ops)
+            return self._overlay(name, df, ops)
         if name in self.external:
             return self.external[name]
         raise KeyError(f"no such container {name!r}")
 
-    def _apply_op(self, name: str, df: DataFrame, op: _Op) -> DataFrame:
-        if op.kind == "insert":
-            return df.unionByName(self._local_df(name, op.rows))
+    def _overlay(self, name: str, df: DataFrame, ops: list[_Op]) -> DataFrame:
+        """``ops`` applied to ``df`` in order. Adjacent staged inserts are
+        batched into ONE single-slice DataFrame: a commit after N row
+        inserts would otherwise union N separate createDataFrame plans.
+        Ordering across insert/edit/delete boundaries is preserved — only
+        runs of consecutive inserts merge."""
+        pending: list[dict] = []
+
+        def flush(d: DataFrame) -> DataFrame:
+            if not pending:
+                return d
+            new = self._local_df(name, pending)
+            pending.clear()
+            return d.unionByName(new)
+
+        for op in ops:
+            if op.kind == "insert":
+                pending.extend(op.rows)
+            else:
+                df = self._apply_op(flush(df), op)
+        return flush(df)
+
+    def _apply_op(self, df: DataFrame, op: _Op) -> DataFrame:
         pred = compile_chain(*op.conditions) if op.conditions[0] else F.lit(True)
         if op.kind == "delete":
             return df.filter(~pred)
@@ -275,13 +417,16 @@ class Warehouse:
     def _coerce_value(self, value: object, alba: str) -> object:
         """Driver-side literal coercion to the column type (the implicit
         coercion matrix, src/alba_types.rs:117-275, applied on CREATE ROW
-        at src/database.rs:600-617)."""
-        import base64 as _b64
-
+        at src/database.rs:600-617). A value that does not fit its
+        column is refused here, so no COMMIT can fail on it later."""
         t = alba.upper()
         _dt, cap = ALBA_TYPES[t]
-        if t in ("INT", "BIGINT"):
-            return int(float(value)) if not isinstance(value, bool) else int(value)
+        if t in _INT_BITS:
+            n = _exact_int(value)
+            bound = 1 << (_INT_BITS[t] - 1)
+            if not -bound <= n < bound:
+                raise ValueError(f"{value!r} is out of {t} range")
+            return n
         if t == "FLOAT":
             return float(value)
         if t == "BOOL":
@@ -293,10 +438,12 @@ class Warehouse:
             if s in ("0", "f", "false"):
                 return False
             raise ValueError(f"cannot coerce {value!r} to BOOL")
+        if t == "NONE":  # the unit type holds no value (SURVEY §1.2)
+            return None
         if t.endswith("BYTES"):
-            b = value if isinstance(value, (bytes, bytearray)) else _b64.b64decode(str(value))
+            b = value if isinstance(value, (bytes, bytearray)) else base64.b64decode(str(value))
             return bytes(b)[:cap] if cap else bytes(b)
-        s = _b64.b64encode(value).decode() if isinstance(value, (bytes, bytearray)) else str(value)
+        s = base64.b64encode(value).decode() if isinstance(value, (bytes, bytearray)) else str(value)
         return s[:cap] if cap else s
 
     def stage_insert(self, name: str, columns: list[str], values: list[object]) -> None:
@@ -310,7 +457,8 @@ class Warehouse:
         row = {col: zero_default(alba) for col, alba in st.schema}
         for c, v in zip(columns, values):
             row[c] = self._coerce_value(v, schema[c])
-        st.ops.append(_Op("insert", rows=[row]))
+        with st.lock:
+            st.ops.append(_Op("insert", rows=[row]))
 
     def stage_edit(self, name: str, columns, values, conditions) -> None:
         st = self._state[name]
@@ -320,80 +468,148 @@ class Warehouse:
             if c not in schema:
                 raise ValueError(f"unknown column {c!r} on {name!r}")
             assignments[c] = self._coerce_value(v, schema[c])
-        st.ops.append(_Op("edit", assignments=assignments, conditions=conditions))
+        with st.lock:
+            st.ops.append(_Op("edit", assignments=assignments, conditions=conditions))
 
     def stage_delete(self, name: str, conditions) -> None:
-        self._state[name].ops.append(_Op("delete", conditions=conditions))
+        st = self._state[name]
+        with st.lock:
+            st.ops.append(_Op("delete", conditions=conditions))
 
     # -- commit / rollback --------------------------------------------------
     def _snapshot_bytes(self, name: str) -> int:
-        """On-disk size of the current snapshot (0 for a fresh table)."""
-        try:
-            path = self._snapshot_path(name, self._current_version(name))
-            return sum(
-                os.path.getsize(os.path.join(path, f))
-                for f in os.listdir(path)
-                if not f.startswith("_")
-            )
-        except OSError:
-            return 0
+        """On-disk size of the files of the current snapshot."""
+        m = self._manifest(name, self._current_version(name))
+        return sum(os.path.getsize(os.path.join(self._dir(name), f)) for f in m.files)
 
-    # below this snapshot size a commit writes ONE file — a small table
-    # rewritten through 32 shuffle partitions is 32 tiny files and 32
-    # tasks of pure overhead; large tables keep their parallel write.
-    # repartition (not coalesce): upstream stages keep their parallelism
-    # and only the final write funnels through one task.
+    # below this snapshot size a rewrite writes ONE file: a small table
+    # written as one file per input partition is many tiny files and as
+    # many tasks for every later read. coalesce (not repartition): no
+    # shuffle, so the write stays one Spark job.
     _SMALL_TABLE_BYTES = 64 << 20
 
-    def _write_snapshot(self, name: str, df: DataFrame, version: int) -> None:
-        """Write parquet to a staged dir, atomic-rename into place, then
-        flip CURRENT via write-temp + rename (SURVEY §4.3)."""
-        final = self._snapshot_path(name, version)
-        staged = os.path.join(self._dir(name), f"_staged_{uuid.uuid4().hex}")
-        if self._snapshot_bytes(name) < self._SMALL_TABLE_BYTES:
-            df = df.repartition(1)
-        df.write.mode("overwrite").parquet(staged)
-        os.rename(staged, final)
-        tmp = os.path.join(self._dir(name), f".current_{uuid.uuid4().hex}"
+    def _one_file_if_small(self, name: str, df: DataFrame) -> DataFrame:
+        return df.coalesce(1) if self._snapshot_bytes(name) < self._SMALL_TABLE_BYTES else df
+
+    def _write_rows(self, name: str, rows: list[dict], staged: str) -> list[str]:
+        """Write staged rows from the driver as one Parquet file (pyarrow,
+        no Spark job) in ``staged``; returns its name."""
+        schema = pa.schema(
+            [(f.name, _ARROW_TYPES[f.dataType.typeName()]) for f in self.spark_schema(name).fields]
         )
+        os.makedirs(staged)
+        fname = f"part-{uuid.uuid4().hex}.parquet"
+        pq.write_table(pa.Table.from_pylist(rows, schema=schema), os.path.join(staged, fname))
+        return [fname]
+
+    @staticmethod
+    def _write_df(df: DataFrame, staged: str) -> list[str]:
+        """Write ``df`` with Spark (one job) to ``staged``; returns the
+        Parquet files it wrote."""
+        df.write.parquet(staged)
+        return _parquet_files(staged)
+
+    @staticmethod
+    def _write_manifest(staged: str, manifest: _Manifest) -> None:
+        with open(os.path.join(staged, MANIFEST), "w") as f:
+            json.dump({"files": list(manifest.files), "appended": manifest.appended}, f)
+
+    def _flip_current(self, name: str, version: int) -> None:
+        tmp = os.path.join(self._dir(name), f".current_{uuid.uuid4().hex}")
         with open(tmp, "w") as f:
             f.write(str(version))
-        os.rename(tmp, os.path.join(self._dir(name), CURRENT))
+        os.replace(tmp, os.path.join(self._dir(name), CURRENT))
+
+    def _write_snapshot(
+        self,
+        name: str,
+        version: int,
+        write: Callable[[str], list[str]],
+        base: _Manifest = _Manifest(),
+    ) -> None:
+        """Commit snapshot ``version``: the files ``base`` lists plus the
+        ones ``write(staged)`` writes to a staged directory. The staged
+        directory gets the manifest and is renamed to ``v_<version>``
+        (failing when that version exists), then CURRENT flips (write-temp
+        + rename, SURVEY §4.3). Files added to a snapshot with files
+        count as appended; without ``base`` files the snapshot is a
+        rewrite. What a commit that raises had written is removed."""
+        staged = os.path.join(self._dir(name), f"_staged_{uuid.uuid4().hex}")
+        final = self._snapshot_path(name, version)
+        try:
+            new = tuple(f"v_{version}/{f}" for f in write(staged))
+            appended = base.appended + len(new) if base.files else 0
+            self._write_manifest(staged, _Manifest(base.files + new, appended))
+            os.rename(staged, final)
+        except BaseException:
+            shutil.rmtree(staged, ignore_errors=True)
+            raise
+        try:
+            self._flip_current(name, version)
+        except BaseException:
+            shutil.rmtree(final, ignore_errors=True)
+            raise
         # retire older snapshots (keep previous for readers mid-flight)
         with self._pins_lock:
             self._retire(name)
 
     def commit(self, name: str | None = None) -> None:
-        names = [name] if name else [n for n, st in self._state.items() if st.ops]
+        names = [name] if name else [n for n, st in list(self._state.items()) if st.ops]
         for n in names:
             st = self._state[n]
-            if not st.ops:
-                continue
-            df = self.read(n)  # overlay view
-            self._write_snapshot(n, df, self._current_version(n) + 1)
-            st.ops.clear()
+            with st.lock:
+                if st.ops:
+                    self._commit(n, st.ops)
+                    st.ops.clear()
+
+    def _commit(self, name: str, ops: list[_Op]) -> None:
+        """Write ``ops`` as the next snapshot (caller holds the lock):
+        insert-only ops append one driver-written file while the
+        snapshot has room for it; anything else is one Spark rewrite."""
+        version = self._current_version(name) + 1
+        old = self._manifest(name, version - 1)
+        if all(op.kind == "insert" for op in ops) and old.appended < MAX_APPENDED_FILES:
+            rows = [r for op in ops for r in op.rows]
+            self._write_snapshot(name, version, lambda s: self._write_rows(name, rows, s), old)
+            return
+        df = self._one_file_if_small(name, self._overlay(name, self.read_committed(name, version - 1), ops))
+        self._write_snapshot(name, version, lambda s: self._write_df(df, s))
 
     def rollback(self, name: str | None = None) -> None:
         names = [name] if name else list(self._state)
         for n in names:
-            self._state[n].ops.clear()
+            st = self._state[n]
+            with st.lock:
+                st.ops.clear()
+
+    @contextmanager
+    def _unstaged(self, name: str):
+        """Hold ``name``'s lock, refusing a container with staged ops."""
+        st = self._state.get(name)
+        if st is None:
+            raise ValueError(f"no such container {name!r}")
+        with st.lock:
+            if st.ops:
+                raise RuntimeError(f"{name!r} has staged ops; COMMIT or ROLLBACK first")
+            yield
 
     def append_df(self, name: str, df: DataFrame) -> int:
-        """Commit `committed ∪ df` as a new snapshot version in one step
-        (the bulk-append path streaming sinks use — no per-row staging).
-        Columns are matched by name against the table schema. Returns the
-        new version."""
-        if name not in self._state:
-            raise ValueError(f"no such container {name!r}")
-        if self._state[name].ops:
-            raise RuntimeError(f"{name!r} has staged ops; COMMIT or ROLLBACK first")
-        cols = [c for c, _ in self._state[name].schema]
-        batch = df.select(
-            *[F.col(c).cast(self.spark_schema(name)[c].dataType) for c in cols]
-        )
-        version = self._current_version(name) + 1
-        self._write_snapshot(name, self.read_committed(name).unionByName(batch), version)
-        return version
+        """Commit ``df``'s rows as a new snapshot version in one step (the
+        bulk-append path streaming sinks use — no per-row staging): its
+        files are written next to the committed ones, or, once the
+        snapshot holds MAX_APPENDED_FILES appended files, rewritten with
+        them. Columns are matched by name against the table schema.
+        Returns the new version."""
+        with self._unstaged(name):
+            schema = self.spark_schema(name)
+            batch = df.select(*[F.col(f.name).cast(f.dataType) for f in schema.fields])
+            version = self._current_version(name) + 1
+            old = self._manifest(name, version - 1)
+            if old.appended >= MAX_APPENDED_FILES:
+                batch, old = self.read_committed(name, version - 1).unionByName(batch), _Manifest()
+            batch = self._one_file_if_small(name, batch)
+            self._write_snapshot(name, version, lambda s: self._write_df(batch, s), old)
+            return version
 
     # -- maintenance ---------------------------------------------------------
     _TARGET_FILE_BYTES = 128 << 20
@@ -404,10 +620,10 @@ class Warehouse:
         small commits → many small files → scan-planning and open()
         overhead dominates at scale). Staged ops are not touched; returns
         the new file count."""
-        if self._state.get(name) and self._state[name].ops:
-            raise RuntimeError(f"{name!r} has staged ops; COMMIT or ROLLBACK first")
-        target = target_file_bytes or self._TARGET_FILE_BYTES
-        nfiles = max(1, -(-self._snapshot_bytes(name) // target))  # ceil
-        df = self.read_committed(name).repartition(nfiles)
-        self._write_snapshot(name, df, self._current_version(name) + 1)
-        return nfiles
+        with self._unstaged(name):
+            target = target_file_bytes or self._TARGET_FILE_BYTES
+            nfiles = max(1, -(-self._snapshot_bytes(name) // target))  # ceil
+            version = self._current_version(name) + 1
+            df = self.read_committed(name, version - 1).repartition(nfiles)
+            self._write_snapshot(name, version, lambda s: self._write_df(df, s))
+            return nfiles

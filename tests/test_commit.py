@@ -3,7 +3,6 @@ driver-written file, edits and deletes rewrite; crash recovery,
 concurrent writers, the file cap, staging coercion, and SEARCH over
 several files in one Spark job."""
 
-import json
 import math
 import os
 import shutil
@@ -11,8 +10,6 @@ import sys
 import threading
 import uuid
 
-import pyarrow as pa
-import pyarrow.parquet as pq
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
@@ -157,22 +154,85 @@ def test_keyset_cursor_pages_after_rewrite(engine, monkeypatch):
     assert [r["id"] for r in back] == pages[1]
 
 
-def test_snapshot_directory_without_manifest_opens(spark, tmp_path):
-    """A container written before manifests (CURRENT names a bare
-    directory of Parquet files) opens with its rows and takes commits."""
-    snap = tmp_path / "wh" / "kv" / "v_3"
-    snap.mkdir(parents=True)
-    rows = pa.table({"id": pa.array([1, 2], pa.int64()), "a": pa.array([10, 20], pa.int32())})
-    pq.write_table(rows, snap / "part-00000.parquet")
-    (snap / "_SUCCESS").write_text("")
-    (snap.parent / CURRENT).write_text("3")
-    (snap.parent / "schema.json").write_text(json.dumps([["id", "BIGINT"], ["a", "INT"]]))
-    eng = Engine(spark, str(tmp_path / "wh"))
-    assert _rows(eng.warehouse.read("kv")) == [(1, 10), (2, 20)]
-    eng.execute("CREATE ROW [id, a] [3, 30] ON 'kv'")
+# -- container names and what a reopen finds ---------------------------------
+
+
+@pytest.mark.parametrize("name", ["", ".", "..", "a/b", "x/../..", "/", "../kv", "a\x00b"])
+def test_create_refuses_names_outside_the_root(tmp_path, engine, name):
+    """A container name is one directory directly under the root: no
+    CREATE removes or writes anything outside its own directory."""
+    _create_kv(engine)
+    engine.execute("CREATE ROW [id, a] [1, 1] ON 'kv'")
+    engine.execute("COMMIT 'kv'")
+    (tmp_path / "keep").write_text("x")
+    before = sorted(os.listdir(tmp_path))
+    with pytest.raises(ValueError, match="invalid container name"):
+        engine.warehouse.create_table(name, [("a", "INT")])
+    if "\x00" not in name:
+        with pytest.raises(ValueError, match="invalid container name"):
+            engine.execute(f"CREATE CONTAINER '{name}' [a] [INT]")
+    assert sorted(os.listdir(tmp_path)) == before
+    assert (tmp_path / "keep").read_text() == "x"
+    assert engine.warehouse.tables() == ["kv"]
+    assert _rows(engine.warehouse.read("kv")) == [(1, 1)]
+
+
+def test_create_keeps_a_directory_it_did_not_write(tmp_path, engine):
+    """A name taken by a symlink or by a directory holding files the
+    warehouse does not write is refused, and both are left as they were."""
+    root = tmp_path / "wh"
+    outside = tmp_path / "outside"
+    outside.mkdir()
+    (outside / "data").write_text("x")
+    (root / "ln").symlink_to(outside)
+    (root / "mine").mkdir()
+    (root / "mine" / "notes.txt").write_text("y")
+    with pytest.raises(ValueError, match="invalid container name"):
+        engine.execute("CREATE CONTAINER 'ln' [a] [INT]")
+    with pytest.raises(ValueError, match="is not a container"):
+        engine.execute("CREATE CONTAINER 'mine' [a] [INT]")
+    assert (outside / "data").read_text() == "x"
+    assert (root / "mine" / "notes.txt").read_text() == "y"
+
+
+@pytest.mark.parametrize("left", ["schema only", "snapshot only"])
+def test_reopen_after_create_cut_short(spark, tmp_path, left):
+    """A create cut short (schema.json and no CURRENT, or a snapshot and
+    no schema.json) holds no rows: the warehouse opens its other
+    containers, and a CREATE of the name replaces the leftover."""
+    root = str(tmp_path / "wh")
+    eng = Engine(spark, root)
+    for name in ("kv", "cut"):
+        _create_kv(eng, name)
+    eng.execute("CREATE ROW [id, a] [1, 1] ON 'kv'")
     eng.execute("COMMIT 'kv'")
-    assert _rows(eng.warehouse.read("kv")) == [(1, 10), (2, 20), (3, 30)]
-    assert eng.warehouse.versions("kv") == [3, 4]
+    cut = tmp_path / "wh" / "cut"
+    (cut / (CURRENT if left == "schema only" else "schema.json")).unlink()
+    reopened = Engine(spark, root)
+    assert reopened.warehouse.tables() == ["kv"]
+    assert _rows(reopened.warehouse.read("kv")) == [(1, 1)]
+    _create_kv(reopened, "cut")
+    reopened.execute("CREATE ROW [id, a] [2, 2] ON 'cut'")
+    reopened.execute("COMMIT 'cut'")
+    assert _rows(Engine(spark, root).warehouse.read("cut")) == [(2, 2)]
+
+
+def test_unreadable_container_is_left_out(spark, tmp_path):
+    """A container whose current manifest cannot be read is left out of
+    the open; the others open with their rows."""
+    root = str(tmp_path / "wh")
+    eng = Engine(spark, root)
+    for name in ("kv", "bad"):
+        _create_kv(eng, name)
+        eng.execute(f"CREATE ROW [id, a] [1, 1] ON '{name}'")
+        eng.execute(f"COMMIT '{name}'")
+    manifest = tmp_path / "wh" / "bad" / "v_1" / wh_mod.MANIFEST
+    manifest.write_text(manifest.read_text()[:5])
+    reopened = Engine(spark, root)
+    assert reopened.warehouse.tables() == ["kv"]
+    assert _rows(reopened.warehouse.read("kv")) == [(1, 1)]
+    with pytest.raises(ValueError, match="already exists"):
+        _create_kv(reopened, "bad")
 
 
 # -- crashes and concurrent writers ------------------------------------------
@@ -322,14 +382,25 @@ def test_multi_source_search_runs_one_job(spark, engine):
 
 
 def test_search_over_appended_files_runs_one_job(spark, engine):
+    """A snapshot at the file cap, each file a partition of its own (as
+    on a box with many cores), is still scanned in one job."""
     _create_kv(engine)
-    for i in range(5):
+    nfiles = wh_mod.MAX_APPENDED_FILES + 1
+    for i in range(nfiles):
         engine.execute(f"CREATE ROW [id, a] [{i}, {i}] ON 'kv'")
         engine.execute("COMMIT 'kv'")
-    assert len(_files(engine.warehouse, "kv")) == 5
-    engine.execute("SEARCH ON 'kv' WHERE id = 3")
-    assert _jobs(spark, lambda: engine.execute("SEARCH ON 'kv' WHERE id = 3")) == 1
-    assert engine.execute("SEARCH ON 'kv' WHERE id = 3").rows() == [{"id": 3, "a": 3}]
+    assert len(_files(engine.warehouse, "kv")) == nfiles
+    conf = engine.spark.conf
+    # a file costs as much as a whole partition: no two share one
+    conf.set("spark.sql.files.openCostInBytes", conf.get("spark.sql.files.maxPartitionBytes"))
+    try:
+        df = engine.search_df("SEARCH ON 'kv' WHERE id = 3")
+        assert df.rdd.getNumPartitions() == nfiles
+        engine.execute("SEARCH ON 'kv' WHERE id = 3")
+        assert _jobs(spark, lambda: engine.execute("SEARCH ON 'kv' WHERE id = 3")) == 1
+        assert engine.execute("SEARCH ON 'kv' WHERE id = 3").rows() == [{"id": 3, "a": 3}]
+    finally:
+        conf.unset("spark.sql.files.openCostInBytes")
 
 
 # -- model test ----------------------------------------------------------------

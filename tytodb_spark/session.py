@@ -18,6 +18,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from tytodb_spark.storage.warehouse import MAX_APPENDED_FILES
+
 # Shuffle width is SCALE-DEPENDENT: 32 is sized for the local[32]
 # bench (200 default-config tasks multiply Python-worker batch overhead
 # on the pandas-UDF paths); a cluster deployment must NOT inherit it —
@@ -51,11 +53,17 @@ _STATEMENT_CONF = {
     "spark.sql.codegen.factoryMode": "NO_CODEGEN",
     # A SEARCH collects limit(n): with one initial partition, Spark
     # scans one and then the rest in a second job, so a SEARCH over
-    # several files or sources ran 2 jobs. Up to 8 partitions now go in
-    # the first job; each may return n rows, and n rows of a held result
-    # take at most engine.HELD_BYTES, so one SEARCH takes in at most
-    # 8 x HELD_BYTES (128 MB) on the driver.
-    "spark.sql.limit.initialNumPartitions": "8",
+    # several files or sources ran 2 jobs. The first job now takes up to
+    # as many partitions as a snapshot holds files (MAX_APPENDED_FILES
+    # + 1), which covers a container's scan whatever the parallelism
+    # (with many cores, each small file is a partition of its own). A
+    # scan with more partitions (several sources at the cap, or a table
+    # large enough to be split) still takes a second job. Each partition
+    # of the first job may send the driver n rows, as compressed
+    # UnsafeRows: n rows of a held result take at most engine.HELD_BYTES
+    # (16 MB) in Python, so the driver JVM takes in at most 17 x 16 MB
+    # of rows, of which it decodes n.
+    "spark.sql.limit.initialNumPartitions": str(MAX_APPENDED_FILES + 1),
 }
 
 

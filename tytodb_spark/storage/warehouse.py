@@ -41,6 +41,10 @@ there, renames it to ``v_<n>`` (the rename fails when n is taken) and
 flips CURRENT last (write-temp + rename); a commit that raises removes
 what it wrote. Opening a Warehouse removes what a crash left behind:
 ``_staged_*``, CURRENT temp files and any ``v_k`` above CURRENT. A
+directory without both schema.json and CURRENT is a create cut short
+and holds no committed rows: it is not opened, and a CREATE of its name
+replaces it. A container that cannot be opened is left out with a
+warning; the others open. A
 manifest is retired once it is older than the previous version and no
 reader pins it; a ``v_k`` directory goes once no retained manifest
 lists a file in it. One lock per container serialises staging, the
@@ -56,8 +60,10 @@ from __future__ import annotations
 
 import base64
 import json
+import logging
 import math
 import os
+import re
 import shutil
 import threading
 import uuid
@@ -80,7 +86,8 @@ MANIFEST = "manifest.json"
 #: Most files insert-only commits and ``append_df`` add to a snapshot
 #: between two rewrites. Spark lists more than 32 input paths with a
 #: job of its own (parallelPartitionDiscovery.threshold), and every file
-#: costs a SEARCH an open and a footer read.
+#: costs a SEARCH an open and a footer read. The statement session's
+#: spark.sql.limit.initialNumPartitions is derived from it.
 MAX_APPENDED_FILES = 16
 
 # Arrow type of each Spark type an ALBA type maps to (ALBA_TYPES).
@@ -94,6 +101,9 @@ _ARROW_TYPES = {
     "void": pa.null(),
 }
 _INT_BITS = {"INT": 32, "BIGINT": 64}
+#: What the warehouse itself writes in a container directory.
+_OWN_ENTRY = re.compile(r"schema\.json(\.tmp_\w+)?|CURRENT|v_\d+|_staged_\w+|\.current_\w+")
+_log = logging.getLogger(__name__)
 
 
 @dataclass
@@ -136,6 +146,11 @@ def _exact_int(value: object) -> int:
     return int(f)
 
 
+def _version(entry: str) -> int | None:
+    """k of a ``v_<k>`` directory entry, else None."""
+    return int(entry[2:]) if re.fullmatch(r"v_\d+", entry) else None
+
+
 def _parquet_files(path: str) -> list[str]:
     """The data files Spark wrote to ``path`` (no markers, no checksums)."""
     return sorted(f for f in os.listdir(path) if f.endswith(".parquet") and f[0] not in "._")
@@ -164,12 +179,19 @@ class Warehouse:
         self._pins_lock = threading.Lock()
         #: (container, version) → (inode of its manifest, DataFrame)
         self._snapshots: dict[tuple[str, int], tuple[int, DataFrame]] = {}
+        self._ddl_lock = threading.Lock()
         os.makedirs(root, exist_ok=True)
         for name in os.listdir(root):
-            if os.path.isfile(self._schema_path(name)):
-                with open(self._schema_path(name)) as f:
-                    self._state[name] = _TableState(schema=[tuple(c) for c in json.load(f)])
+            if not self._committed(name):
+                continue
+            try:
                 self._recover(name)
+                with open(self._schema_path(name)) as f:
+                    schema = [tuple(c) for c in json.load(f)]
+            except (OSError, ValueError, KeyError) as e:
+                _log.warning("container %r left out: cannot open it (%s)", name, e)
+                continue
+            self._state[name] = _TableState(schema=schema)
 
     # -- paths ------------------------------------------------------------
     def _dir(self, name: str) -> str:
@@ -177,6 +199,22 @@ class Warehouse:
 
     def _schema_path(self, name: str) -> str:
         return os.path.join(self._dir(name), "schema.json")
+
+    def _committed(self, name: str) -> bool:
+        """Whether ``name`` is a container whose create completed: it has
+        both its schema and a CURRENT version."""
+        d = self._dir(name)
+        return os.path.isfile(self._schema_path(name)) and os.path.isfile(os.path.join(d, CURRENT))
+
+    def _check_name(self, name: str) -> None:
+        """Refuse a container name that is not one directory directly
+        under the root: the name joins the root path as given."""
+        if (
+            name in ("", ".", "..")
+            or any(sep in name for sep in ("/", "\0", os.sep, os.altsep) if sep)
+            or os.path.dirname(os.path.realpath(self._dir(name))) != os.path.realpath(self.root)
+        ):
+            raise ValueError(f"invalid container name {name!r}")
 
     def _current_version(self, name: str) -> int:
         with open(os.path.join(self._dir(name), CURRENT)) as f:
@@ -221,34 +259,41 @@ class Warehouse:
 
     # -- DDL ----------------------------------------------------------------
     def create_table(self, name: str, schema: list[tuple[str, str]]) -> None:
-        if name in self._state or name in self.external or os.path.isfile(self._schema_path(name)):
-            raise ValueError(f"container {name!r} already exists")
-        if len(schema) > self.MAX_COLUMNS:
-            raise ValueError(
-                f"container {name!r} declares {len(schema)} columns; "
-                f"max_columns is {self.MAX_COLUMNS}"
-            )
-        # schema.json is written last: a directory without one is what a
-        # create cut short left behind
-        shutil.rmtree(self._dir(name), ignore_errors=True)
-        os.makedirs(self._dir(name))
+        self._check_name(name)
+        with self._ddl_lock:
+            if name in self._state or name in self.external or self._committed(name):
+                raise ValueError(f"container {name!r} already exists")
+            if len(schema) > self.MAX_COLUMNS:
+                raise ValueError(
+                    f"container {name!r} declares {len(schema)} columns; "
+                    f"max_columns is {self.MAX_COLUMNS}"
+                )
+            d = self._dir(name)
+            if os.path.lexists(d):
+                # schema.json is written last: a directory of the
+                # warehouse's own files without it (or without CURRENT)
+                # is what a create cut short left behind
+                if os.path.islink(d) or not os.path.isdir(d) or not all(map(_OWN_ENTRY.fullmatch, os.listdir(d))):
+                    raise ValueError(f"{d!r} exists and is not a container")
+                shutil.rmtree(d)
+            os.makedirs(d)
 
-        def no_files(staged: str) -> list[str]:
-            os.makedirs(staged)
-            return []
+            def no_files(staged: str) -> list[str]:
+                os.makedirs(staged)
+                return []
 
-        self._write_snapshot(name, 0, no_files)
-        tmp = self._schema_path(name) + f".tmp_{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump(schema, f)
-        os.replace(tmp, self._schema_path(name))
-        self._state[name] = _TableState(schema=schema)
+            self._write_snapshot(name, 0, no_files)
+            tmp = self._schema_path(name) + f".tmp_{uuid.uuid4().hex}"
+            with open(tmp, "w") as f:
+                json.dump(schema, f)
+            os.replace(tmp, self._schema_path(name))
+            self._state[name] = _TableState(schema=schema)
 
     def drop_table(self, name: str) -> None:
         st = self._state.get(name)
         if st is None:
             raise ValueError(f"no such container {name!r}")
-        with st.lock:
+        with self._ddl_lock, st.lock:
             del self._state[name]
             shutil.rmtree(self._dir(name), ignore_errors=True)
         for key in list(self._snapshots):
@@ -276,9 +321,9 @@ class Warehouse:
     def _versions(self, name: str) -> list[int]:
         d = self._dir(name)
         return sorted(
-            int(e[2:])
+            _version(e)
             for e in os.listdir(d)
-            if e.startswith("v_") and os.path.isfile(os.path.join(d, e, MANIFEST))
+            if _version(e) is not None and os.path.isfile(os.path.join(d, e, MANIFEST))
         )
 
     def versions(self, name: str) -> list[int]:
@@ -344,23 +389,20 @@ class Warehouse:
                 os.remove(os.path.join(d, f"v_{v}", MANIFEST))
                 self._snapshots.pop((name, v), None)
         for entry in os.listdir(d):
-            if entry.startswith("v_") and entry not in live and int(entry[2:]) < current:
+            k = _version(entry)
+            if k is not None and k < current and entry not in live:
                 shutil.rmtree(os.path.join(d, entry), ignore_errors=True)
 
     def _recover(self, name: str) -> None:
         """Remove what a commit cut short left behind: staged
-        directories, CURRENT temp files and snapshots above CURRENT. A
-        current snapshot written before manifests (a bare directory of
-        Parquet files) gets one listing its files."""
+        directories, CURRENT temp files and snapshots above CURRENT."""
         d = self._dir(name)
         current = self._current_version(name)
-        snapshot = self._snapshot_path(name, current)
-        if not os.path.isfile(os.path.join(snapshot, MANIFEST)):
-            files = tuple(f"v_{current}/{f}" for f in _parquet_files(snapshot))
-            self._write_manifest(snapshot, _Manifest(files))
+        self._manifest(name, current)  # raises when the snapshot is unreadable
         for entry in os.listdir(d):
             path = os.path.join(d, entry)
-            if entry.startswith("_staged_") or (entry.startswith("v_") and int(entry[2:]) > current):
+            k = _version(entry)
+            if entry.startswith("_staged_") or (k is not None and k > current):
                 shutil.rmtree(path, ignore_errors=True)
             elif entry.startswith(".current_"):
                 os.remove(path)

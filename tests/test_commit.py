@@ -1,8 +1,10 @@
-"""COMMIT over snapshot manifests: insert-only commits append one
-driver-written file, edits and deletes rewrite; crash recovery,
-concurrent writers, the file cap, staging coercion, and SEARCH over
-several files in one Spark job."""
+"""COMMIT over snapshot manifests: commits append driver-written files
+and edit/delete ops, and the commit past the cap rewrites the fold in
+one Spark job; the manifest's literals and the fold's order, crash
+recovery, concurrent writers, staging coercion and checks, and SEARCH
+over several files in one Spark job."""
 
+import json
 import math
 import os
 import shutil
@@ -11,7 +13,7 @@ import threading
 import uuid
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from tytodb_spark import engine as engine_mod
@@ -47,6 +49,12 @@ def _files(wh: Warehouse, name: str) -> tuple[str, ...]:
     return wh._manifest(name, wh._current_version(name)).files
 
 
+def _stats(wh: Warehouse, name: str) -> tuple[int, int, int, int]:
+    """(version, files, committed ops, appended entries) of ``name``."""
+    st = wh.stats(name)
+    return st["version"], st["files"], st["ops"], st["appended"]
+
+
 def _create_kv(engine, name="kv"):
     engine.execute(f"CREATE CONTAINER '{name}' [id, a] [BIGINT, INT]")
 
@@ -54,7 +62,8 @@ def _create_kv(engine, name="kv"):
 # -- what a commit writes ----------------------------------------------------
 
 
-def test_insert_commit_runs_no_spark_job(spark, engine):
+def test_insert_commit_runs_no_spark_job(spark, engine, monkeypatch):
+    monkeypatch.setattr(wh_mod, "MAX_APPENDED_FILES", 3)
     _create_kv(engine)
     for i in range(3):
         engine.execute(f"CREATE ROW [id, a] [{i}, {i * 10}] ON 'kv'")
@@ -64,11 +73,19 @@ def test_insert_commit_runs_no_spark_job(spark, engine):
     wh = engine.warehouse
     assert len(_files(wh, "kv")) == 2
     assert _rows(wh.read("kv")) == [(i, i * 10) for i in range(4)]
-    # an edit rewrites the snapshot in one job and folds the appended file
-    engine.execute("EDIT ROW [a] [99] ON 'kv' WHERE id = 1")
+    # an edit and a delete, staged and committed, append their ops to
+    # the manifest: no job and no file
+    assert _jobs(spark, lambda: engine.execute("EDIT ROW [a] [99] ON 'kv' WHERE id = 1")) == 0
+    assert _jobs(spark, lambda: engine.execute("COMMIT 'kv'")) == 0
+    assert _jobs(spark, lambda: engine.execute("DELETE ROW ON 'kv' WHERE id = 2")) == 0
+    assert _jobs(spark, lambda: engine.execute("COMMIT 'kv'")) == 0
+    assert _stats(wh, "kv") == (4, 2, 2, 3)
+    assert _rows(wh.read("kv")) == [(0, 0), (1, 99), (3, 30)]
+    # the COMMIT that would pass the cap rewrites the fold in one job
+    engine.execute("EDIT ROW [a] [7] ON 'kv' WHERE id = 3")
     assert _jobs(spark, lambda: engine.execute("COMMIT 'kv'")) == 1
-    assert len(_files(wh, "kv")) == 1
-    assert _rows(wh.read("kv")) == [(0, 0), (1, 99), (2, 20), (3, 30)]
+    assert _stats(wh, "kv") == (5, 1, 0, 0)
+    assert _rows(wh.read("kv")) == [(0, 0), (1, 99), (3, 7)]
 
 
 # One value per row for each ALBA type, at the edges of its domain.
@@ -93,10 +110,12 @@ _EDGE_VALUES = {
 }
 
 
-def test_every_alba_type_reads_back_from_both_writers(engine):
+def test_every_alba_type_reads_back_from_both_writers(engine, monkeypatch):
     """The driver-written file of an insert commit and the Spark rewrite
-    of an edit commit hold the same rows, with the same types."""
+    of an edit commit (a cap of 0 forces it) hold the same rows, with the
+    same types."""
     assert set(_EDGE_VALUES) == set(ALBA_TYPES)
+    monkeypatch.setattr(wh_mod, "MAX_APPENDED_FILES", 0)
     wh = engine.warehouse
     types = list(_EDGE_VALUES)
     cols = [f"c{i}" for i in range(len(types))]
@@ -111,6 +130,7 @@ def test_every_alba_type_reads_back_from_both_writers(engine):
     got = sorted(tuple(r) for r in driver_written.collect())
     wh.stage_edit("all", ["c0"], [5], ((("k", "<", 0),), ()))  # matches no row
     wh.commit("all")
+    assert wh.stats("all")["ops"] == 0
     rewritten = wh.read("all")
     assert sorted(tuple(r) for r in rewritten.collect()) == got == want
     assert rewritten.schema == driver_written.schema == wh.spark_schema("all")
@@ -133,8 +153,10 @@ def test_auto_commit_past_file_cap(spark, tmp_path, monkeypatch):
 
 def test_keyset_cursor_pages_after_rewrite(engine, monkeypatch):
     """A keyset cursor over appended files keeps paging after an edit
-    COMMIT rewrote the snapshot: its pinned manifest keeps those files."""
+    COMMIT rewrote the snapshot (a cap of 1 forces it): its pinned
+    manifest keeps those files."""
     monkeypatch.setattr(engine_mod, "CAP", 150)
+    monkeypatch.setattr(wh_mod, "MAX_APPENDED_FILES", 1)
     engine.execute("CREATE CONTAINER 'nums' [id] [INT]")
     for lo in (0, 125):
         for i in range(lo, lo + 125):
@@ -146,6 +168,36 @@ def test_keyset_cursor_pages_after_rewrite(engine, monkeypatch):
     for _ in range(2):
         engine.execute(f"EDIT ROW [id] [-1] ON 'nums' WHERE id < {2 * PAGE_SIZE}")
         engine.execute("COMMIT 'nums'")
+    pages = [[r["id"] for r in res.rows()]]
+    for _ in range(2):
+        pages.append([r["id"] for r in engine.execute(f"QYCNNXT '{res.query_id}'").rows()])
+    assert pages == [list(range(0, 100)), list(range(100, 200)), list(range(200, 250))]
+    back = engine.execute(f"QYCNPVS '{res.query_id}'").rows()
+    assert [r["id"] for r in back] == pages[1]
+
+
+def test_keyset_cursor_pages_a_fold_after_its_rewrite(engine, monkeypatch):
+    """A keyset cursor over a folded version (two files and a committed
+    delete) keeps paging after the COMMIT past the cap rewrote the fold
+    and a later one retired the versions around the pinned one."""
+    monkeypatch.setattr(engine_mod, "CAP", 150)
+    monkeypatch.setattr(wh_mod, "MAX_APPENDED_FILES", 3)
+    wh = engine.warehouse
+    engine.execute("CREATE CONTAINER 'nums' [id] [INT]")
+    for lo, hi in ((0, 125), (125, 260)):
+        for i in range(lo, hi):
+            engine.execute(f"CREATE ROW [id] [{i}] ON 'nums'")
+        engine.execute("COMMIT 'nums'")
+    engine.execute("DELETE ROW ON 'nums' WHERE id >= 250")
+    engine.execute("COMMIT 'nums'")
+    assert _stats(wh, "nums") == (3, 2, 1, 2)
+    res = engine.execute("SEARCH ON 'nums'")
+    assert engine._cursors[res.query_id].keyset is not None
+    for _ in range(3):
+        engine.execute(f"EDIT ROW [id] [-1] ON 'nums' WHERE id < {2 * PAGE_SIZE}")
+        engine.execute("COMMIT 'nums'")
+    assert _stats(wh, "nums")[2] == 1  # v5 rewrote the fold, v6 appended an op
+    assert wh.versions("nums") == [3, 5, 6]
     pages = [[r["id"] for r in res.rows()]]
     for _ in range(2):
         pages.append([r["id"] for r in engine.execute(f"QYCNNXT '{res.query_id}'").rows()])
@@ -257,13 +309,25 @@ class _OsCrashingReplace:
         os.replace(src, dst)
 
 
-@pytest.mark.parametrize("change", ["insert", "edit"])
+# change → (statement, rows after its COMMIT); "edit" goes through the
+# Spark rewrite (a cap of 0 forces it), the ops are appended
+_CHANGES = {
+    "insert": ("CREATE ROW [id, a] [9, 9] ON 'kv'", [(0, 0), (1, 0), (2, 0), (9, 9)]),
+    "edit": ("EDIT ROW [a] [7] ON 'kv' WHERE id = 1", [(0, 0), (1, 7), (2, 0)]),
+    "edit op": ("EDIT ROW [a] [7] ON 'kv' WHERE id = 1", [(0, 0), (1, 7), (2, 0)]),
+    "delete op": ("DELETE ROW ON 'kv' WHERE id = 1", [(0, 0), (2, 0)]),
+}
+
+
+@pytest.mark.parametrize("change", list(_CHANGES))
 @pytest.mark.parametrize("step", ["files", "manifest", "rename", "flip"])
 def test_commit_survives_crash(spark, tmp_path, monkeypatch, step, change):
     """A crash at each step of a commit's write: the directory as the
     crash left it reopens at the last committed rows and takes the
     COMMIT again; the live warehouse removed what the failed commit
     wrote and commits the staged change."""
+    if change == "edit":
+        monkeypatch.setattr(wh_mod, "MAX_APPENDED_FILES", 0)
     root, image = str(tmp_path / "wh"), str(tmp_path / "crashed")
     eng = Engine(spark, root)
     _create_kv(eng)
@@ -271,8 +335,7 @@ def test_commit_survives_crash(spark, tmp_path, monkeypatch, step, change):
         eng.execute(f"CREATE ROW [id, a] [{i}, 0] ON 'kv'")
     eng.execute("COMMIT 'kv'")
     committed = [(0, 0), (1, 0), (2, 0)]
-    stmt = "CREATE ROW [id, a] [9, 9] ON 'kv'" if change == "insert" else "EDIT ROW [a] [7] ON 'kv' WHERE id = 1"
-    after = sorted(committed + [(9, 9)]) if change == "insert" else [(0, 0), (1, 7), (2, 0)]
+    stmt, after = _CHANGES[change]
 
     def crash(*_):
         shutil.copytree(root, image)
@@ -305,6 +368,7 @@ def test_commit_survives_crash(spark, tmp_path, monkeypatch, step, change):
     assert _rows(reopened.warehouse.read("kv")) == after
     eng.execute("COMMIT 'kv'")
     assert _rows(eng.warehouse.read("kv")) == after
+    assert eng.warehouse.stats("kv")["ops"] == (1 if change.endswith(" op") else 0)
 
 
 def test_two_threads_commit_one_container(engine):
@@ -338,17 +402,24 @@ def test_two_threads_commit_one_container(engine):
 # -- staging coercion ----------------------------------------------------------
 
 # A COMMIT with only inserts is written by the driver; one with a delete
-# too goes through the Spark rewrite.
-_PATHS = {"driver": [], "rewrite": ["DELETE ROW ON 'big' WHERE id = -1"]}
+# too appends it as an op; past the cap (0 here) a COMMIT goes through
+# the Spark rewrite.
+_PATHS = {"driver": [], "op": ["DELETE ROW ON 'big' WHERE id = -1"], "rewrite": ["DELETE ROW ON 'big' WHERE id = -1"]}
+
+
+def _take(path, monkeypatch):
+    if path == "rewrite":
+        monkeypatch.setattr(wh_mod, "MAX_APPENDED_FILES", 0)
+    return _PATHS[path]
 
 
 @pytest.mark.parametrize("path", sorted(_PATHS))
-def test_bigint_is_parsed_exactly(engine, path):
+def test_bigint_is_parsed_exactly(engine, monkeypatch, path):
     engine.execute("CREATE CONTAINER 'big' [id, b] [BIGINT, BIGINT]")
     engine.execute("CREATE ROW [id, b] [1, 9007199254740993] ON 'big'")
     engine.execute("CREATE ROW [id, b] [2, '-9007199254740995'] ON 'big'")
     engine.execute("CREATE ROW [id, b] [3, 2.9] ON 'big'")  # a real float truncates
-    for stmt in _PATHS[path]:
+    for stmt in _take(path, monkeypatch):
         engine.execute(stmt)
     engine.execute("COMMIT 'big'")
     got = {r["id"]: r["b"] for r in engine.execute("SEARCH ON 'big'").rows()}
@@ -358,15 +429,172 @@ def test_bigint_is_parsed_exactly(engine, path):
 
 
 @pytest.mark.parametrize("path", sorted(_PATHS))
-def test_value_for_none_column_is_stored_as_null(engine, path):
+def test_value_for_none_column_is_stored_as_null(engine, monkeypatch, path):
     engine.execute("CREATE CONTAINER 'big' [id, n] [BIGINT, NONE]")
     engine.execute("CREATE ROW [id, n] [1, 'ignored'] ON 'big'")
-    for stmt in _PATHS[path]:
+    for stmt in _take(path, monkeypatch):
         engine.execute(stmt)
     engine.execute("COMMIT 'big'")
     engine.execute("CREATE ROW [id] [2] ON 'big'")
     engine.execute("COMMIT 'big'")
     assert engine.execute("SEARCH ON 'big'").rows() == [{"id": 1, "n": None}, {"id": 2, "n": None}]
+
+
+# -- edits and deletes: NULL, checks, manifest literals, fold order ------------
+
+
+@pytest.mark.parametrize("path", ["op", "rewrite"])
+@pytest.mark.parametrize("where", ["n = 1", "n != 1", "id = 0 OR n = 1"])
+def test_delete_removes_the_rows_a_search_returns(engine, monkeypatch, path, where):
+    """A DELETE removes exactly the rows a SEARCH with its WHERE returns:
+    not those where the chain is NULL (NONE columns hold only NULL)."""
+    _take(path, monkeypatch)
+    engine.execute("CREATE CONTAINER 'z' [id, n] [BIGINT, NONE]")
+    for i in range(3):
+        engine.execute(f"CREATE ROW [id] [{i}] ON 'z'")
+    engine.execute("COMMIT 'z'")
+    found = [r["id"] for r in engine.execute(f"SEARCH ON 'z' WHERE {where}").rows()]
+    engine.execute(f"DELETE ROW ON 'z' WHERE {where}")
+    engine.execute("COMMIT 'z'")
+    left = [r["id"] for r in engine.execute("SEARCH ON 'z'").rows()]
+    assert sorted(found + left) == [0, 1, 2]
+    assert found == ([0] if where.startswith("id") else [])
+
+
+@pytest.mark.parametrize("where", ["nosuch = 1", "s = 5", "s = TRUE", "a = 'x'", "s &&&> '['", "id = 99999999999999999999"])
+def test_condition_spark_cannot_evaluate_is_refused_when_staged(engine, where):
+    """An EDIT or DELETE whose WHERE fails in Spark (an unknown column, a
+    string column compared with a number or bool, a literal that does
+    not cast, a bad regex, an integer past BIGINT) is refused when
+    staged: a committed op would fail every later read."""
+    engine.execute("CREATE CONTAINER 't' [id, a, s] [BIGINT, INT, SMALL-STRING]")
+    engine.execute("CREATE ROW [id, a, s] [1, 1, '1'] ON 't'")
+    engine.execute("COMMIT 't'")
+    for stmt in (f"EDIT ROW [a] [2] ON 't' WHERE {where}", f"DELETE ROW ON 't' WHERE {where}"):
+        with pytest.raises(Exception):
+            engine.execute(stmt)
+    engine.execute("COMMIT 't'")
+    assert engine.warehouse.stats("t")["version"] == 1
+    assert engine.execute("SEARCH ON 't'").rows() == [{"id": 1, "a": 1, "s": "1"}]
+
+
+@pytest.mark.parametrize(
+    "value", [2**70, -(2**63) - 1, 9007199254740993, math.nan, math.inf, -math.inf, -0.0, 1e-300,
+              b"\x00\xff", b"", True, False, None, "", "é\U0001f600"]
+)
+def test_manifest_literal_round_trips(value):
+    j = json.loads(json.dumps(wh_mod._lit_json(value), allow_nan=False))
+    back = wh_mod._lit_value(j)
+    assert type(back) is type(value) and repr(back) == repr(value)
+
+
+@pytest.mark.parametrize("j", [{"int": 5}, {"float": 1.5}, {"bool": "true"}, {"str": 1}, {"bytes": "@@"},
+                               {"date": "2020-01-01"}, {"int": "1", "str": "1"}, [1], 5, "x"])
+def test_manifest_literal_refuses_what_it_did_not_write(j):
+    with pytest.raises(ValueError):
+        wh_mod._lit_value(j)
+
+
+def _canon(df) -> list[str]:
+    """Rows by their key, each as repr: NaN equals NaN and -0.0 differs
+    from 0.0."""
+    return [repr(tuple(r)) for r in sorted(df.collect(), key=lambda r: r[0])]
+
+
+def test_committed_ops_round_trip_through_the_manifest(spark, tmp_path):
+    """Edits of every ALBA type, and edits and deletes whose conditions
+    use every operator with a literal of each kind: a new Warehouse on
+    the committed manifest reads the rows the staged overlay showed."""
+    root = str(tmp_path / "wh")
+    wh = Warehouse(spark, root)
+    types = list(_EDGE_VALUES)
+    cols = [f"c{i}" for i in range(len(types))]
+    c = dict(zip(types, cols))
+    wh.create_table("all", [("k", "INT")] + list(zip(cols, types)))
+    for k in range(5):
+        wh.stage_insert("all", ["k"] + cols, [k] + [_EDGE_VALUES[t][k % 3] for t in types])
+    wh.commit("all")
+    # (column assigned, value, condition); no condition reads a column
+    # an op before it assigned, so the COMMIT appends every op
+    ops = [
+        (c["INT"], 7, (c["FLOAT"], "!=", -1.5)),
+        (c["FLOAT"], math.nan, (c["BIGINT"], "=", 9007199254740993)),
+        (c["FLOAT"], -0.0, (c["BOOL"], "<", True)),
+        (c["TEXT"], "bytes", (c["NANO-BYTES"], ">=", b"\xff")),
+        (c["NANO-BYTES"], b"\x01", (c["CHAR"], "&>", "é")),
+        (c["BIGINT"], -(2**63), (c["SMALL-STRING"], "&&>", "S")),
+        (c["NONE"], None, (c["LARGE-STRING"], "&&&>", "^l+$")),
+    ]
+    for col, value, cond in ops:
+        wh.stage_edit("all", [col], [value], ((cond,), ()))
+    wh.stage_delete("all", ((("k", ">=", 3), (c["MEDIUM-BYTES"], "=", b"m" * 10000)), ("AND",)))  # row 3
+    # every type assigned: row 4 takes the edge values of row 2
+    wh.stage_edit("all", cols, [_EDGE_VALUES[t][2] for t in types], ((("k", "=", 4),), ()))
+    staged = _canon(wh.read("all"))
+    assert staged != _canon(wh.read_committed("all"))
+    wh.commit("all")
+    assert wh.stats("all")["ops"] == len(ops) + 2
+    assert _canon(wh.read("all")) == staged
+    assert _canon(Warehouse(spark, root).read("all")) == staged
+
+
+@pytest.mark.parametrize("op", ["DELETE ROW ON 'kv' WHERE id = 5", "EDIT ROW [a] [0] ON 'kv' WHERE id = 5"])
+def test_committed_op_leaves_later_rows_alone(spark, tmp_path, op):
+    """A committed op applies to the rows before it only: a row inserted
+    and committed after it keeps its values, read right after the
+    COMMIT and by a new Warehouse."""
+    root = str(tmp_path / "wh")
+    eng = Engine(spark, root)
+    _create_kv(eng)
+    eng.execute("CREATE ROW [id, a] [5, 1] ON 'kv'")
+    eng.execute("COMMIT 'kv'")
+    eng.execute(op)
+    eng.execute("COMMIT 'kv'")
+    eng.execute("CREATE ROW [id, a] [5, 2] ON 'kv'")
+    eng.execute("COMMIT 'kv'")
+    assert _stats(eng.warehouse, "kv") == (3, 2, 1, 2)
+    want = [(5, 2)] if op.startswith("DELETE") else [(5, 0), (5, 2)]
+    assert _rows(eng.warehouse.read("kv")) == want
+    assert _rows(Engine(spark, root).warehouse.read("kv")) == want
+
+
+def test_op_reading_an_assigned_column_rewrites(spark, engine):
+    """An op whose condition reads a column a committed op assigned goes
+    through the rewrite (a filter pushed through a chain of such edits
+    grows exponentially); an op that reads other columns is appended.
+    A row inserted after an edit is not touched by it."""
+    _create_kv(engine)
+    wh = engine.warehouse
+    engine.execute("CREATE ROW [id, a] [1, 0] ON 'kv'")
+    engine.execute("CREATE ROW [id, a] [2, 50] ON 'kv'")
+    engine.execute("COMMIT 'kv'")
+    engine.execute("EDIT ROW [a] [1] ON 'kv' WHERE a = 0")
+    engine.execute("CREATE ROW [id, a] [3, 0] ON 'kv'")
+    engine.execute("COMMIT 'kv'")
+    assert _stats(wh, "kv") == (2, 2, 1, 2)
+    for i in range(1, 5):
+        engine.execute(f"EDIT ROW [a] [{i + 1}] ON 'kv' WHERE a = {i}")
+        # every other COMMIT meets a fold whose edit assigned a
+        assert _jobs(spark, lambda: engine.execute("COMMIT 'kv'")) == i % 2
+        assert _stats(wh, "kv")[1:3] == ((1, 0) if i % 2 else (1, 1))
+    engine.execute("DELETE ROW ON 'kv' WHERE id = 7")
+    assert _jobs(spark, lambda: engine.execute("COMMIT 'kv'")) == 0
+    engine.execute("DELETE ROW ON 'kv' WHERE a = 5")
+    assert _jobs(spark, lambda: engine.execute("COMMIT 'kv'")) == 1
+    assert _rows(wh.read("kv")) == [(2, 50), (3, 0)]
+    assert _rows(Warehouse(spark, wh.root).read("kv")) == [(2, 50), (3, 0)]
+
+
+def test_append_df_after_a_committed_op(spark, engine):
+    """Rows ``append_df`` adds after a committed delete are not deleted."""
+    _create_kv(engine)
+    wh = engine.warehouse
+    wh.append_df("kv", spark.range(4).selectExpr("id", "cast(id as int) a"))
+    engine.execute("DELETE ROW ON 'kv' WHERE a < 2")
+    engine.execute("COMMIT 'kv'")
+    wh.append_df("kv", spark.range(2).selectExpr("id", "cast(id as int) a"))
+    assert _stats(wh, "kv") == (3, 2, 1, 2)
+    assert _rows(wh.read("kv")) == [(0, 0), (1, 1), (2, 2), (3, 3)]
 
 
 # -- SEARCH over several files ---------------------------------------------------
@@ -427,11 +655,14 @@ def _apply(rows: list[tuple], step: tuple) -> list[tuple]:
 @settings(max_examples=12, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow])
 @given(steps=st.lists(_STEPS, min_size=1, max_size=8))
+# ops fill the cap, then a COMMIT of an insert and an edit crosses it
+@example(steps=[("insert", 1, 1), ("commit",), ("edit", 1, 2), ("commit",), ("delete", 0), ("commit",),
+                ("insert", 0, 3), ("edit", 1, 4), ("commit",), ("delete", 1), ("commit",)])
 def test_commits_match_a_dict_model(engine, monkeypatch, steps):
     """Random insert/edit/delete/commit/rollback sequences against a
     model; ``read()`` after each step, and after each COMMIT the
-    previous version as the model had it. A cap of 2 appended files
-    sends some insert commits through the rewrite."""
+    previous version as the model had it. A cap of 2 appended entries
+    sends some commits through the rewrite."""
     monkeypatch.setattr(wh_mod, "MAX_APPENDED_FILES", 2)
     t = f"m{uuid.uuid4().hex[:8]}"
     _create_kv(engine, t)

@@ -4,11 +4,12 @@ Reproduces the reference's transactional surface (SURVEY §2.5):
 - MVCC write buffer → an in-memory, per-table op log (inserts / edits /
   deletes) overlaid on the committed snapshot at read time (reference
   overlays its buffer over the file in get_rows, src/container.rs:354-363).
-- COMMIT → write only what changed as new Parquet files, then atomically
-  flip a CURRENT pointer to a new snapshot manifest (the reference writes
-  the buffered rows into their slots, src/container.rs:248-342; Parquet
-  page checksums + atomic rename replace its strix checksum daemon and
-  graveyard slot reuse, src/strix.rs:18-56, SURVEY §4.3).
+- COMMIT → write only what changed (new Parquet files and committed
+  ops), then atomically flip a CURRENT pointer to a new snapshot
+  manifest (the reference writes the buffered rows into their slots,
+  src/container.rs:248-342; Parquet page checksums + atomic rename
+  replace its strix checksum daemon and graveyard slot reuse,
+  src/strix.rs:18-56, SURVEY §4.3).
 - ROLLBACK → drop the op log (src/container.rs:241-247).
 - Per-table (not cross-table) atomicity, matching the reference
   (Database::commit loops containers independently, src/database.rs:252-261).
@@ -20,21 +21,31 @@ On disk a container is a directory::
     v_<k>/        the Parquet files commit k wrote, plus its manifest
                   (manifest.json) while version k is retained
 
-A snapshot is its manifest: the list of every file it holds, each
-stored in some ``v_k/``, and the count of files appended since the
-last rewrite. What a COMMIT writes depends on what it holds:
-- only inserts (auto-commit CREATE ROW included): the staged rows are
-  on the driver already, so pyarrow writes them as ONE file and the new
-  manifest is the old one plus that file. No Spark job (a Spark write
-  of the same rows pays a job, a task and a Python-worker round trip,
-  hundreds of milliseconds for a few rows). The commit that
-  would append past MAX_APPENDED_FILES rewrites instead, so the file
-  list stays bounded.
-- any edit or delete: one Spark job rewrites the overlay (committed
-  files + staged ops) into new files, one file for a small table; this
-  also folds in the files earlier insert commits appended.
-``append_df`` writes a batch's files with Spark next to the old ones;
-``compact`` rewrites to target-sized files.
+A snapshot is its manifest: an ordered list of entries, and the count
+of entries appended since the last rewrite. An entry is either
+- a Parquet file, stored in the ``v_k/`` of the commit that wrote it, or
+- a committed op: an edit (its assignments and condition chain) or a
+  delete (its condition chain), with every literal as tagged JSON
+  (``_lit_json``), so each value reads back exactly.
+A snapshot's rows are the fold of its entries in order: a file adds its
+rows, an op changes the rows of the entries before it (merge-on-read, as
+Iceberg v2 row-level deletes and Delta deletion vectors). ``_overlay``
+is that fold; a read of staged ops is the same fold, run on.
+
+A COMMIT appends its staged change to the manifest: each run of staged
+inserts becomes ONE file that pyarrow writes on the driver, each edit
+or delete an op entry, in staging order. So no COMMIT below the cap runs
+a Spark job (a Spark write of a few rows pays a job, a task and a
+Python-worker round trip, hundreds of milliseconds). The COMMIT that
+would take the snapshot past MAX_APPENDED_FILES appended entries
+rewrites the fold (committed entries + staged ops) in one Spark job
+instead, one file for a small table, so the fold stays short. A commit
+registers its new version's DataFrame, built from the previous one with
+one union or one op per entry, so the next read folds nothing again.
+``append_df`` writes a batch's files with Spark after the old entries;
+``compact`` rewrites to target-sized files. An edit or delete is checked
+when it is staged (``_check_conditions``): a committed op runs at every
+later read, so one Spark could not evaluate would make them all fail.
 
 Every commit writes into a ``_staged_*`` directory, puts the manifest
 there, renames it to ``v_<n>`` (the rename fails when n is taken) and
@@ -47,12 +58,12 @@ replaces it. A container that cannot be opened is left out with a
 warning; the others open. A
 manifest is retired once it is older than the previous version and no
 reader pins it; a ``v_k`` directory goes once no retained manifest
-lists a file in it. One lock per container serialises staging, the
-op-list read of ``read``, COMMIT and ROLLBACK.
+lists a file in it (an op entry lists none). One lock per container
+serialises staging, the op-list read of ``read``, COMMIT and ROLLBACK.
 
-Scale: this is the copy-on-write pattern Delta/Iceberg formalize (a
-manifest of immutable files, swapped atomically); reads stay
-pushdown-able and partition-prunable, writes are new files + one
+Scale: this is the manifest pattern Delta/Iceberg formalize (immutable
+files and row-level changes, swapped atomically); reads stay
+pushdown-able and partition-prunable, writes are new entries + one
 pointer flip.
 """
 
@@ -74,19 +85,20 @@ from dataclasses import dataclass, field
 
 import pyarrow as pa
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from tytodb_spark.functions.tyto import ALBA_TYPES, zero_default
-from tytodb_spark.operators.predicates import compile_chain
+from tytodb_spark.operators.predicates import compile_chain, compile_condition
 
 CURRENT = "CURRENT"
 MANIFEST = "manifest.json"
-#: Most files insert-only commits and ``append_df`` add to a snapshot
-#: between two rewrites. Spark lists more than 32 input paths with a
-#: job of its own (parallelPartitionDiscovery.threshold), and every file
-#: costs a SEARCH an open and a footer read. The statement session's
+#: Most entries (files and committed ops) commits and ``append_df`` add
+#: to a snapshot between two rewrites. Spark lists more than 32 input
+#: paths with a job of its own (parallelPartitionDiscovery.threshold),
+#: every file costs a SEARCH an open and a footer read, and every op a
+#: step of the fold. The statement session's
 #: spark.sql.limit.initialNumPartitions is derived from it.
 MAX_APPENDED_FILES = 16
 
@@ -119,12 +131,154 @@ class _TableState:
     schema: list[tuple[str, str]]  # (col, ALBA type)
     ops: list[_Op] = field(default_factory=list)
     lock: threading.RLock = field(default_factory=threading.RLock)
+    #: one row of the columns' zero defaults, as literals (``_check_conditions``)
+    zero: DataFrame | None = None
+
+
+#: A manifest entry: a file ("v_<k>/<file>", relative to the container
+#: dir) or a committed edit or delete.
+_Entry = str | _Op
 
 
 @dataclass(frozen=True)
 class _Manifest:
-    files: tuple[str, ...] = ()  # "v_<k>/<file>", relative to the container dir
-    appended: int = 0  # files added since the last rewrite
+    entries: tuple[_Entry, ...] = ()  # in commit order
+    appended: int = 0  # entries added since the last rewrite
+
+    @property
+    def files(self) -> tuple[str, ...]:
+        return tuple(e for e in self.entries if isinstance(e, str))
+
+    def then(self, new: list) -> _Manifest:
+        """This snapshot with ``new`` entries appended. The first entry
+        of an empty snapshot is its base, not an appended one."""
+        return _Manifest(self.entries + tuple(new), self.appended + len(new) - (bool(new) and not self.entries))
+
+
+def _lit_json(value: object) -> object:
+    """A literal as strict, tagged JSON: NULL, or one ``{kind: payload}``.
+    Numbers travel as text, so integers of any size, NaN, ±inf and -0.0
+    read back exactly, as does the Python type of each value."""
+    if value is None:
+        return None
+    if isinstance(value, bool):
+        return {"bool": value}
+    if isinstance(value, int):
+        return {"int": str(value)}
+    if isinstance(value, float):
+        return {"float": repr(value)}
+    if isinstance(value, (bytes, bytearray)):
+        return {"bytes": base64.b64encode(value).decode()}
+    if isinstance(value, str):
+        return {"str": value}
+    raise TypeError(f"no manifest form for literal {value!r}")
+
+
+def _lit_value(j: object) -> object:
+    """The literal ``_lit_json`` wrote; anything else raises ValueError."""
+    if j is None:
+        return None
+    if isinstance(j, dict) and len(j) == 1:
+        [(kind, p)] = j.items()
+        if kind in ("bool", "str") and type(p) is {"bool": bool, "str": str}[kind]:
+            return p
+        if isinstance(p, str):
+            if kind == "int":
+                return int(p)
+            if kind == "float":
+                return float(p)
+            if kind == "bytes":
+                return base64.b64decode(p, validate=True)
+    raise ValueError(f"bad literal {j!r} in manifest")
+
+
+def _entry_json(e: _Entry) -> object:
+    if isinstance(e, str):
+        return e
+    triples, gates = e.conditions
+    out = {"op": e.kind, "where": [[c, o, _lit_json(v)] for c, o, v in triples], "gates": list(gates)}
+    if e.kind == "edit":
+        out["set"] = [[c, _lit_json(v)] for c, v in e.assignments.items()]
+    return out
+
+
+def _entry(j: object) -> _Entry:
+    if isinstance(j, str):
+        return j
+    if j["op"] not in ("edit", "delete"):
+        raise ValueError(f"bad entry {j!r} in manifest")
+    conditions = (tuple((c, o, _lit_value(v)) for c, o, v in j["where"]), tuple(j["gates"]))
+    assignments = {c: _lit_value(v) for c, v in j["set"]} if j["op"] == "edit" else None
+    return _Op(j["op"], assignments=assignments, conditions=conditions)
+
+
+def _op_columns(op: _Op, values: dict[str, Column], only: Column | None = None):
+    """What an edit or delete does, as Columns over the rows it reads,
+    where column c holds ``values[c.lower()]`` if set, else itself: a
+    delete → the Column of the rows it keeps; an edit → each assigned
+    column's new value. ``only`` limits the op to the rows where it
+    holds. A row whose chain is NULL is neither deleted nor edited, as a
+    SEARCH does not return it."""
+    triples, gates = op.conditions
+    pred = compile_chain([(values.get(c.lower(), c), o, v) for c, o, v in triples], gates)
+    if only is not None:
+        pred = pred & only
+    if op.kind == "delete":
+        return ~F.coalesce(pred, F.lit(False))
+    return {c: F.when(pred, F.lit(v)).otherwise(values.get(c.lower(), F.col(c))) for c, v in op.assignments.items()}
+
+
+@dataclass
+class _Fold:
+    """A committed snapshot as ONE scan of its files, a filter (the rows
+    the committed deletes keep) and a projection (each column's value
+    after the committed edits), the ops as Columns over the scan. An op
+    applies to the rows of the files before it: its condition is ANDed
+    with the row's file (the scan's ``_metadata.file_name``) being one
+    of them. A scan per file would cost every SEARCH a scan node, ~15-20
+    ms each.
+
+    No op may read a column an earlier op of the fold assigned
+    (``takes``); such a commit rewrites instead. Spark pushes a filter
+    below a projection by substituting each column's value, and an edit
+    that reads the column it assigns holds that value twice, so a chain
+    of them grows the plan exponentially. Columns do not refer to the
+    scan: a commit extends the fold without building the older ops
+    again, and the scan is built anew only when files were added."""
+
+    files: list[str] = field(default_factory=list)
+    values: dict[str, Column] = field(default_factory=dict)  # lower-cased column → its value
+    keep: Column | None = None
+    scan: DataFrame | None = None  # of ``files``, reused while they stay
+
+    def takes(self, ops: list[_Op]) -> bool:
+        """Whether no condition of ``ops`` reads a column that the fold
+        or an op before it assigned."""
+        assigned = set(self.values)
+        for op in ops:
+            if op.kind != "insert":
+                if any(c.lower() in assigned for c, _, _ in op.conditions[0]):
+                    return False
+                assigned.update(c.lower() for c in op.assignments or ())
+        return True
+
+    def then(self, entries: list[_Entry]) -> _Fold:
+        files, values, keep = list(self.files), dict(self.values), self.keep
+        for e in entries:
+            if isinstance(e, str):
+                files.append(e)
+                continue
+            if not files:
+                continue  # no row comes before it
+            if any(c.lower() in values for c, _, _ in e.conditions[0]):
+                raise ValueError("an op reads a column an earlier op assigned")
+            before = F.col("_metadata.file_name").isin([os.path.basename(f) for f in files])
+            out = _op_columns(e, values, before)
+            if e.kind == "delete":
+                keep = out if keep is None else keep & out
+            else:
+                values.update((c.lower(), v) for c, v in out.items())
+        return _Fold(files, values, keep, self.scan if files == self.files else None)
 
 
 def _exact_int(value: object) -> int:
@@ -177,8 +331,8 @@ class Warehouse:
         #: (container, version) → open readers that still page it
         self._pins: Counter[tuple[str, int]] = Counter()
         self._pins_lock = threading.Lock()
-        #: (container, version) → (inode of its manifest, DataFrame)
-        self._snapshots: dict[tuple[str, int], tuple[int, DataFrame]] = {}
+        #: (container, version) → (inode of its manifest, fold, DataFrame)
+        self._snapshots: dict[tuple[str, int], tuple[int, _Fold, DataFrame]] = {}
         self._ddl_lock = threading.Lock()
         os.makedirs(root, exist_ok=True)
         for name in os.listdir(root):
@@ -226,7 +380,7 @@ class Warehouse:
     def _manifest(self, name: str, version: int) -> _Manifest:
         with open(os.path.join(self._snapshot_path(name, version), MANIFEST)) as f:
             m = json.load(f)
-        return _Manifest(tuple(m["files"]), m["appended"])
+        return _Manifest(tuple(map(_entry, m["entries"])), m["appended"])
 
     # -- schema helpers ----------------------------------------------------
     def spark_schema(self, name: str) -> T.StructType:
@@ -302,20 +456,35 @@ class Warehouse:
 
     # -- reads ---------------------------------------------------------------
     def read_committed(self, name: str, version: int | None = None) -> DataFrame:
-        """A committed snapshot: exactly the files its manifest lists. A
+        """A committed snapshot: the fold of its manifest's entries. A
         manifest never changes once renamed into place, so its DataFrame
-        (resolved relation and file listing) is built once and reused
-        while the manifest lives; the inode tells a manifest apart from
-        a later one of the same version (a container dropped and created
+        (resolved relations, file listings and ops) is built once, by
+        the commit that wrote it or at the first read, and reused while
+        the manifest lives; the inode tells a manifest apart from a
+        later one of the same version (a container dropped and created
         again)."""
-        v = self._current_version(name) if version is None else version
+        return self._snapshot(name, self._current_version(name) if version is None else version)[1]
+
+    def _snapshot(self, name: str, v: int) -> tuple[_Fold, DataFrame]:
+        """Version ``v``'s fold and its DataFrame, reused or built."""
         ino = os.stat(os.path.join(self._snapshot_path(name, v), MANIFEST)).st_ino
         hit = self._snapshots.get((name, v))
         if hit is not None and hit[0] == ino:
-            return hit[1]
-        paths = [os.path.join(self._dir(name), f) for f in self._manifest(name, v).files]
-        df = self.spark.read.schema(self.spark_schema(name)).parquet(*paths)
-        self._snapshots[(name, v)] = (ino, df)
+            return hit[1:]
+        fold = _Fold().then(list(self._manifest(name, v).entries))
+        df = self._frame(name, fold)
+        self._snapshots[(name, v)] = (ino, fold, df)
+        return fold, df
+
+    def _frame(self, name: str, fold: _Fold) -> DataFrame:
+        """The DataFrame of ``fold``: its scan (built if missing), its
+        filter and its projection, where it has them."""
+        if fold.scan is None:
+            paths = [os.path.join(self._dir(name), f) for f in fold.files]
+            fold.scan = self.spark.read.schema(self.spark_schema(name)).parquet(*paths)
+        df = fold.scan if fold.keep is None else fold.scan.filter(fold.keep)
+        if fold.values:
+            df = df.select(*[fold.values.get(c.lower(), F.col(c)).alias(c) for c, _ in self._state[name].schema])
         return df
 
     def _versions(self, name: str) -> list[int]:
@@ -424,9 +593,10 @@ class Warehouse:
         raise KeyError(f"no such container {name!r}")
 
     def _overlay(self, name: str, df: DataFrame, ops: list[_Op]) -> DataFrame:
-        """``ops`` applied to ``df`` in order. Adjacent staged inserts are
-        batched into ONE single-slice DataFrame: a commit after N row
-        inserts would otherwise union N separate createDataFrame plans.
+        """Staged ``ops`` applied to ``df`` in order. Adjacent staged
+        inserts are batched into ONE single-slice DataFrame: a commit
+        after N row inserts would otherwise union N separate
+        createDataFrame plans.
         Ordering across insert/edit/delete boundaries is preserved — only
         runs of consecutive inserts merge."""
         pending: list[dict] = []
@@ -442,18 +612,10 @@ class Warehouse:
             if op.kind == "insert":
                 pending.extend(op.rows)
             else:
-                df = self._apply_op(flush(df), op)
+                out = _op_columns(op, {})
+                df = flush(df)
+                df = df.filter(out) if op.kind == "delete" else df.withColumns(out)
         return flush(df)
-
-    def _apply_op(self, df: DataFrame, op: _Op) -> DataFrame:
-        pred = compile_chain(*op.conditions) if op.conditions[0] else F.lit(True)
-        if op.kind == "delete":
-            return df.filter(~pred)
-        if op.kind == "edit":
-            for col, val in op.assignments.items():
-                df = df.withColumn(col, F.when(pred, F.lit(val)).otherwise(F.col(col)))
-            return df
-        raise ValueError(op.kind)
 
     # -- staged writes ---------------------------------------------------------
     def _coerce_value(self, value: object, alba: str) -> object:
@@ -510,19 +672,49 @@ class Warehouse:
             if c not in schema:
                 raise ValueError(f"unknown column {c!r} on {name!r}")
             assignments[c] = self._coerce_value(v, schema[c])
+        self._check_conditions(name, conditions)
         with st.lock:
             st.ops.append(_Op("edit", assignments=assignments, conditions=conditions))
 
     def stage_delete(self, name: str, conditions) -> None:
         st = self._state[name]
+        self._check_conditions(name, conditions)
         with st.lock:
             st.ops.append(_Op("delete", conditions=conditions))
 
+    def _check_conditions(self, name: str, conditions) -> None:
+        """Raise what Spark raises for a condition it cannot evaluate on
+        ``name``'s columns, with no Spark job: each condition is planned
+        over one row of the columns' zero defaults as literals, and the
+        optimizer folds it. That finds an unknown column, a mistyped
+        literal, a bad regex, and a string column compared with a number
+        or bool (its zero default '' does not cast). A staged op runs at
+        every read, and a committed one at every read after it: one
+        that fails would fail them all."""
+        if not conditions[0]:
+            return
+        st = self._state[name]
+        if st.zero is None:
+            st.zero = self.spark.sql("SELECT 1").select(
+                *[F.lit(zero_default(alba)).cast(ALBA_TYPES[alba][0]).alias(c) for c, alba in st.schema]
+            )
+        checked = st.zero.select(*(compile_condition(*c) for c in conditions[0]))
+        checked._jdf.queryExecution().optimizedPlan()
+
     # -- commit / rollback --------------------------------------------------
-    def _snapshot_bytes(self, name: str) -> int:
-        """On-disk size of the files of the current snapshot."""
-        m = self._manifest(name, self._current_version(name))
-        return sum(os.path.getsize(os.path.join(self._dir(name), f)) for f in m.files)
+    def stats(self, name: str) -> dict[str, int]:
+        """The current snapshot of ``name`` as its manifest tells it (no
+        Spark job): version, files, committed ops, entries appended since
+        the last rewrite, and the bytes of its files."""
+        v = self._current_version(name)
+        m = self._manifest(name, v)
+        return {
+            "version": v,
+            "files": len(m.files),
+            "ops": len(m.entries) - len(m.files),
+            "appended": m.appended,
+            "bytes": sum(os.path.getsize(os.path.join(self._dir(name), f)) for f in m.files),
+        }
 
     # below this snapshot size a rewrite writes ONE file: a small table
     # written as one file per input partition is many tiny files and as
@@ -531,18 +723,24 @@ class Warehouse:
     _SMALL_TABLE_BYTES = 64 << 20
 
     def _one_file_if_small(self, name: str, df: DataFrame) -> DataFrame:
-        return df.coalesce(1) if self._snapshot_bytes(name) < self._SMALL_TABLE_BYTES else df
+        return df.coalesce(1) if self.stats(name)["bytes"] < self._SMALL_TABLE_BYTES else df
 
-    def _write_rows(self, name: str, rows: list[dict], staged: str) -> list[str]:
-        """Write staged rows from the driver as one Parquet file (pyarrow,
-        no Spark job) in ``staged``; returns its name."""
+    def _write_entries(self, name: str, new: list[list[dict] | _Op], staged: str) -> list[_Entry]:
+        """The entries of ``new`` in ``staged``: each list of staged rows
+        written from the driver as one Parquet file (pyarrow, no Spark
+        job) and named by it, each edit or delete as it is."""
         schema = pa.schema(
             [(f.name, _ARROW_TYPES[f.dataType.typeName()]) for f in self.spark_schema(name).fields]
         )
         os.makedirs(staged)
-        fname = f"part-{uuid.uuid4().hex}.parquet"
-        pq.write_table(pa.Table.from_pylist(rows, schema=schema), os.path.join(staged, fname))
-        return [fname]
+        out: list[_Entry] = []
+        for e in new:
+            if isinstance(e, list):
+                fname = f"part-{uuid.uuid4().hex}.parquet"
+                pq.write_table(pa.Table.from_pylist(e, schema=schema), os.path.join(staged, fname))
+                e = fname
+            out.append(e)
+        return out
 
     @staticmethod
     def _write_df(df: DataFrame, staged: str) -> list[str]:
@@ -554,7 +752,8 @@ class Warehouse:
     @staticmethod
     def _write_manifest(staged: str, manifest: _Manifest) -> None:
         with open(os.path.join(staged, MANIFEST), "w") as f:
-            json.dump({"files": list(manifest.files), "appended": manifest.appended}, f)
+            entries = [_entry_json(e) for e in manifest.entries]
+            json.dump({"entries": entries, "appended": manifest.appended}, f, allow_nan=False)
 
     def _flip_current(self, name: str, version: int) -> None:
         tmp = os.path.join(self._dir(name), f".current_{uuid.uuid4().hex}")
@@ -566,31 +765,38 @@ class Warehouse:
         self,
         name: str,
         version: int,
-        write: Callable[[str], list[str]],
-        base: _Manifest = _Manifest(),
+        write: Callable[[str], list[_Entry]],
+        base: _Manifest | None = None,
     ) -> None:
-        """Commit snapshot ``version``: the files ``base`` lists plus the
-        ones ``write(staged)`` writes to a staged directory. The staged
-        directory gets the manifest and is renamed to ``v_<version>``
-        (failing when that version exists), then CURRENT flips (write-temp
-        + rename, SURVEY §4.3). Files added to a snapshot with files
-        count as appended; without ``base`` files the snapshot is a
-        rewrite. What a commit that raises had written is removed."""
+        """Commit snapshot ``version``: the entries of ``base`` (version
+        - 1) followed by the ones ``write(staged)`` returns, its files
+        written to a staged directory; without ``base`` the snapshot is a
+        rewrite, ``write``'s files alone. The staged directory gets the
+        manifest and is renamed to ``v_<version>`` (failing when that
+        version exists), then CURRENT flips (write-temp + rename, SURVEY
+        §4.3). An append registers its fold: version - 1's, extended by
+        the new entries, and its DataFrame, built before the flip, so an
+        entry that cannot be applied fails the commit. What a commit that
+        raises had written is removed."""
         staged = os.path.join(self._dir(name), f"_staged_{uuid.uuid4().hex}")
         final = self._snapshot_path(name, version)
         try:
-            new = tuple(f"v_{version}/{f}" for f in write(staged))
-            appended = base.appended + len(new) if base.files else 0
-            self._write_manifest(staged, _Manifest(base.files + new, appended))
+            new = [f"v_{version}/{e}" if isinstance(e, str) else e for e in write(staged)]
+            self._write_manifest(staged, _Manifest(tuple(new)) if base is None else base.then(new))
             os.rename(staged, final)
         except BaseException:
             shutil.rmtree(staged, ignore_errors=True)
             raise
         try:
+            if base is not None:
+                fold = self._snapshot(name, version - 1)[0].then(new)
+                snapshot = (os.stat(os.path.join(final, MANIFEST)).st_ino, fold, self._frame(name, fold))
             self._flip_current(name, version)
         except BaseException:
             shutil.rmtree(final, ignore_errors=True)
             raise
+        if base is not None:
+            self._snapshots[(name, version)] = snapshot
         # retire older snapshots (keep previous for readers mid-flight)
         with self._pins_lock:
             self._retire(name)
@@ -606,13 +812,22 @@ class Warehouse:
 
     def _commit(self, name: str, ops: list[_Op]) -> None:
         """Write ``ops`` as the next snapshot (caller holds the lock):
-        insert-only ops append one driver-written file while the
-        snapshot has room for it; anything else is one Spark rewrite."""
+        appended to the manifest in staging order, each run of inserts
+        as one driver-written file, while the snapshot has room for the
+        entries and its fold takes the ops; else one Spark rewrite of
+        the fold."""
         version = self._current_version(name) + 1
         old = self._manifest(name, version - 1)
-        if all(op.kind == "insert" for op in ops) and old.appended < MAX_APPENDED_FILES:
-            rows = [r for op in ops for r in op.rows]
-            self._write_snapshot(name, version, lambda s: self._write_rows(name, rows, s), old)
+        new: list[list[dict] | _Op] = []
+        for op in ops:
+            if op.kind != "insert":
+                new.append(op)
+            elif new and isinstance(new[-1], list):
+                new[-1].extend(op.rows)
+            else:
+                new.append(list(op.rows))
+        if old.then(new).appended <= MAX_APPENDED_FILES and self._snapshot(name, version - 1)[0].takes(ops):
+            self._write_snapshot(name, version, lambda s: self._write_entries(name, new, s), old)
             return
         df = self._one_file_if_small(name, self._overlay(name, self.read_committed(name, version - 1), ops))
         self._write_snapshot(name, version, lambda s: self._write_df(df, s))
@@ -638,17 +853,17 @@ class Warehouse:
     def append_df(self, name: str, df: DataFrame) -> int:
         """Commit ``df``'s rows as a new snapshot version in one step (the
         bulk-append path streaming sinks use — no per-row staging): its
-        files are written next to the committed ones, or, once the
-        snapshot holds MAX_APPENDED_FILES appended files, rewritten with
-        them. Columns are matched by name against the table schema.
-        Returns the new version."""
+        files are appended after the committed entries, or, once the
+        snapshot holds MAX_APPENDED_FILES appended entries, rewritten
+        with their fold. Columns are matched by name against the table
+        schema. Returns the new version."""
         with self._unstaged(name):
             schema = self.spark_schema(name)
             batch = df.select(*[F.col(f.name).cast(f.dataType) for f in schema.fields])
             version = self._current_version(name) + 1
             old = self._manifest(name, version - 1)
             if old.appended >= MAX_APPENDED_FILES:
-                batch, old = self.read_committed(name, version - 1).unionByName(batch), _Manifest()
+                batch, old = self.read_committed(name, version - 1).unionByName(batch), None
             batch = self._one_file_if_small(name, batch)
             self._write_snapshot(name, version, lambda s: self._write_df(batch, s), old)
             return version
@@ -664,7 +879,7 @@ class Warehouse:
         the new file count."""
         with self._unstaged(name):
             target = target_file_bytes or self._TARGET_FILE_BYTES
-            nfiles = max(1, -(-self._snapshot_bytes(name) // target))  # ceil
+            nfiles = max(1, -(-self.stats(name)["bytes"] // target))  # ceil
             version = self._current_version(name) + 1
             df = self.read_committed(name, version - 1).repartition(nfiles)
             self._write_snapshot(name, version, lambda s: self._write_df(df, s))

@@ -31,10 +31,9 @@ from pyspark.sql import functions as F
 Condition = tuple[str, str, object]
 
 
-def compile_condition(column: str | Column, op: str, value: object) -> Column:
-    """One ``column OP literal`` triple → Spark Column (boolean). The
-    column is a name, or a Column that stands for it."""
-    c = column if isinstance(column, Column) else F.col(column)
+def compile_condition(column: str, op: str, value: object) -> Column:
+    """One ``column OP literal`` triple → Spark Column (boolean)."""
+    c = F.col(column)
     if op in ("=", "=="):
         return c == F.lit(value)
     if op == "!=":

@@ -29,19 +29,22 @@ of entries appended since the last rewrite. An entry is either
   (``_lit_json``), so each value reads back exactly.
 A snapshot's rows are the fold of its entries in order: a file adds its
 rows, an op changes the rows of the entries before it (merge-on-read, as
-Iceberg v2 row-level deletes and Delta deletion vectors). ``_overlay``
-is that fold; a read of staged ops is the same fold, run on.
+Iceberg v2 row-level deletes and Delta deletion vectors). ``_Fold`` reads
+it as ONE scan of the files, one filter (the rows the deletes keep) and
+one projection (each column's value after the edits), each op limited
+to the rows of the files before it. A read of staged ops applies them
+on top (``_overlay``); ``_op_columns`` is what an op does in both.
 
 A COMMIT appends its staged change to the manifest: each run of staged
 inserts becomes ONE file that pyarrow writes on the driver, each edit
-or delete an op entry, in staging order. So no COMMIT below the cap runs
-a Spark job (a Spark write of a few rows pays a job, a task and a
-Python-worker round trip, hundreds of milliseconds). The COMMIT that
-would take the snapshot past MAX_APPENDED_FILES appended entries
-rewrites the fold (committed entries + staged ops) in one Spark job
-instead, one file for a small table, so the fold stays short. A commit
-registers its new version's DataFrame, built from the previous one with
-one union or one op per entry, so the next read folds nothing again.
+or delete an op entry, in staging order. So no such COMMIT runs a Spark
+job (a Spark write of a few rows pays a job, a task and a Python-worker
+round trip, hundreds of milliseconds). It rewrites the fold (committed
+entries + staged ops) in one Spark job instead, one file for a small
+table, when it would take the snapshot past MAX_APPENDED_FILES appended
+entries, or when one of its ops reads a column a committed op assigned
+(see ``_Fold``). A commit registers its new version's fold, extended
+from the previous one, so the next read builds no op again.
 ``append_df`` writes a batch's files with Spark after the old entries;
 ``compact`` rewrites to target-sized files. An edit or delete is checked
 when it is staged (``_check_conditions``): a committed op runs at every
@@ -213,14 +216,12 @@ def _entry(j: object) -> _Entry:
 
 
 def _op_columns(op: _Op, values: dict[str, Column], only: Column | None = None):
-    """What an edit or delete does, as Columns over the rows it reads,
-    where column c holds ``values[c.lower()]`` if set, else itself: a
-    delete → the Column of the rows it keeps; an edit → each assigned
-    column's new value. ``only`` limits the op to the rows where it
-    holds. A row whose chain is NULL is neither deleted nor edited, as a
-    SEARCH does not return it."""
-    triples, gates = op.conditions
-    pred = compile_chain([(values.get(c.lower(), c), o, v) for c, o, v in triples], gates)
+    """What an edit or delete does, as Columns: a delete → the Column of
+    the rows it keeps; an edit → each assigned column's new value, where
+    column c held ``values[c.lower()]`` if set, else itself. ``only``
+    limits the op to the rows where it holds. A row whose chain is NULL
+    is neither deleted nor edited, as a SEARCH does not return it."""
+    pred = compile_chain(*op.conditions)
     if only is not None:
         pred = pred & only
     if op.kind == "delete":
@@ -267,17 +268,13 @@ class _Fold:
         for e in entries:
             if isinstance(e, str):
                 files.append(e)
-                continue
-            if not files:
-                continue  # no row comes before it
-            if any(c.lower() in values for c, _, _ in e.conditions[0]):
-                raise ValueError("an op reads a column an earlier op assigned")
-            before = F.col("_metadata.file_name").isin([os.path.basename(f) for f in files])
-            out = _op_columns(e, values, before)
-            if e.kind == "delete":
-                keep = out if keep is None else keep & out
-            else:
-                values.update((c.lower(), v) for c, v in out.items())
+            elif files:  # an op before every file changes no row
+                before = F.col("_metadata.file_name").isin([os.path.basename(f) for f in files])
+                out = _op_columns(e, values, before)
+                if e.kind == "delete":
+                    keep = out if keep is None else keep & out
+                else:
+                    values.update((c.lower(), v) for c, v in out.items())
         return _Fold(files, values, keep, self.scan if files == self.files else None)
 
 

@@ -589,11 +589,12 @@ class Warehouse:
             return self.external[name]
         raise KeyError(f"no such container {name!r}")
 
-    def _overlay(self, name: str, df: DataFrame, ops: list[_Op]) -> DataFrame:
-        """Staged ``ops`` applied to ``df`` in order. Adjacent staged
-        inserts are batched into ONE single-slice DataFrame: a commit
-        after N row inserts would otherwise union N separate
-        createDataFrame plans.
+    def _overlay(self, name: str, df: DataFrame, ops: list[_Entry]) -> DataFrame:
+        """Staged ``ops`` applied to ``df`` in order: a staged insert or a
+        file (a path under the container) adds rows, an edit or delete
+        changes the rows before it. Adjacent staged inserts are batched
+        into ONE single-slice DataFrame: a commit after N row inserts
+        would otherwise union N separate createDataFrame plans.
         Ordering across insert/edit/delete boundaries is preserved — only
         runs of consecutive inserts merge."""
         pending: list[dict] = []
@@ -606,7 +607,10 @@ class Warehouse:
             return d.unionByName(new)
 
         for op in ops:
-            if op.kind == "insert":
+            if isinstance(op, str):
+                path = os.path.join(self._dir(name), op)
+                df = flush(df).unionByName(self.spark.read.schema(self.spark_schema(name)).parquet(path))
+            elif op.kind == "insert":
                 pending.extend(op.rows)
             else:
                 out = _op_columns(op, {})
@@ -826,8 +830,18 @@ class Warehouse:
         if old.then(new).appended <= MAX_APPENDED_FILES and self._snapshot(name, version - 1)[0].takes(ops):
             self._write_snapshot(name, version, lambda s: self._write_entries(name, new, s), old)
             return
-        df = self._one_file_if_small(name, self._overlay(name, self.read_committed(name, version - 1), ops))
-        self._write_snapshot(name, version, lambda s: self._write_df(df, s))
+        # The staged rows reach the rewrite as files pyarrow writes on the
+        # driver: a Spark read of rows from the driver starts a Python
+        # worker (~2 s and ~130 MB the first time).
+        rows = os.path.join(self._dir(name), f"_staged_{uuid.uuid4().hex}")
+        try:
+            entries = [os.path.join(os.path.basename(rows), e) if isinstance(e, str) else e
+                       for e in self._write_entries(name, new, rows)]
+            df = self._overlay(name, self.read_committed(name, version - 1), entries)
+            df = self._one_file_if_small(name, df)
+            self._write_snapshot(name, version, lambda s: self._write_df(df, s))
+        finally:
+            shutil.rmtree(rows, ignore_errors=True)
 
     def rollback(self, name: str | None = None) -> None:
         names = [name] if name else list(self._state)

@@ -287,6 +287,24 @@ def test_unreadable_container_is_left_out(spark, tmp_path):
         _create_kv(reopened, "bad")
 
 
+def test_reopen_reads_a_files_only_manifest(spark, tmp_path):
+    """A manifest that lists only files (``{"files": [...]}``, written
+    before ops were committed) still reads, and takes commits."""
+    root = str(tmp_path / "wh")
+    eng = Engine(spark, root)
+    _create_kv(eng)
+    eng.execute("CREATE ROW [id, a] [1, 1] ON 'kv'")
+    eng.execute("COMMIT 'kv'")
+    manifest = tmp_path / "wh" / "kv" / "v_1" / wh_mod.MANIFEST
+    m = json.loads(manifest.read_text())
+    manifest.write_text(json.dumps({"files": m["entries"], "appended": m["appended"]}))
+    reopened = Engine(spark, root)
+    reopened.execute("DELETE ROW ON 'kv' WHERE id = 1")
+    reopened.execute("CREATE ROW [id, a] [2, 2] ON 'kv'")
+    reopened.execute("COMMIT 'kv'")
+    assert _rows(reopened.warehouse.read("kv")) == [(2, 2)]
+
+
 # -- crashes and concurrent writers ------------------------------------------
 
 

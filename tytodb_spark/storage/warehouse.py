@@ -183,7 +183,7 @@ def _lit_value(j: object) -> object:
         return None
     if isinstance(j, dict) and len(j) == 1:
         [(kind, p)] = j.items()
-        if kind in ("bool", "str") and type(p) is {"bool": bool, "str": str}[kind]:
+        if (kind, type(p)) in (("bool", bool), ("str", str)):
             return p
         if isinstance(p, str):
             if kind == "int":
@@ -377,7 +377,8 @@ class Warehouse:
     def _manifest(self, name: str, version: int) -> _Manifest:
         with open(os.path.join(self._snapshot_path(name, version), MANIFEST)) as f:
             m = json.load(f)
-        return _Manifest(tuple(map(_entry, m["entries"])), m["appended"])
+        # a manifest written before ops were committed lists only files
+        return _Manifest(tuple(map(_entry, m["entries"] if "entries" in m else m["files"])), m["appended"])
 
     # -- schema helpers ----------------------------------------------------
     def spark_schema(self, name: str) -> T.StructType:

@@ -15,6 +15,7 @@ import uuid
 import pytest
 from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
+from pyspark import SparkContext
 
 from tytodb_spark import engine as engine_mod
 from tytodb_spark.engine import PAGE_SIZE, Engine
@@ -111,9 +112,9 @@ _EDGE_VALUES = {
 
 
 def test_every_alba_type_reads_back_from_both_writers(engine, monkeypatch):
-    """The driver-written file of an insert commit and the Spark rewrite
-    of an edit commit (a cap of 0 forces it) hold the same rows, with the
-    same types."""
+    """The staged rows, the driver-written file of an insert commit and
+    the Spark rewrite of an edit commit (a cap of 0 forces it) hold the
+    same rows, with the same types."""
     assert set(_EDGE_VALUES) == set(ALBA_TYPES)
     monkeypatch.setattr(wh_mod, "MAX_APPENDED_FILES", 0)
     wh = engine.warehouse
@@ -125,6 +126,8 @@ def test_every_alba_type_reads_back_from_both_writers(engine, monkeypatch):
         values = [_EDGE_VALUES[t][k] for t in types]
         wh.stage_insert("all", ["k"] + cols, [k] + values)
         want.append((k, *values))
+    staged = wh.read("all")
+    assert sorted(tuple(r) for r in staged.collect()) == want
     wh.commit("all")
     driver_written = wh.read("all")
     got = sorted(tuple(r) for r in driver_written.collect())
@@ -133,7 +136,84 @@ def test_every_alba_type_reads_back_from_both_writers(engine, monkeypatch):
     assert wh.stats("all")["ops"] == 0
     rewritten = wh.read("all")
     assert sorted(tuple(r) for r in rewritten.collect()) == got == want
-    assert rewritten.schema == driver_written.schema == wh.spark_schema("all")
+    assert rewritten.schema == driver_written.schema == staged.schema == wh.spark_schema("all")
+
+
+# Staged rows read, edited, deleted, committed through both writers (the
+# cap patched to 4: the first COMMIT appends 3 entries after its first
+# file, the second would pass the cap and rewrites) and rolled back.
+_SESSION = [
+    "CREATE CONTAINER 'kv' [id, a] [BIGINT, INT]",
+    "CREATE ROW [id, a] [1, 10] ON 'kv'",
+    "CREATE ROW [id, a] [9007199254740993, 20] ON 'kv'",
+    "SEARCH ON 'kv'",
+    "SEARCH ON 'kv' WHERE a = 20",
+    "EDIT ROW [a] [11] ON 'kv' WHERE id = 1",
+    "CREATE ROW [id, a] [3, 30] ON 'kv'",
+    "DELETE ROW ON 'kv' WHERE id = 9007199254740993",
+    "SEARCH ON 'kv'",
+    "COMMIT 'kv'",
+    "SEARCH ON 'kv'",
+    "CREATE ROW [id, a] [4, 40] ON 'kv'",
+    "EDIT ROW [a] [41] ON 'kv' WHERE id = 4",
+    "SEARCH ON 'kv' WHERE id > 1",
+    "COMMIT 'kv'",
+    "SEARCH ON 'kv'",
+    "CREATE ROW [id, a] [5, 50] ON 'kv'",
+    "SEARCH ON 'kv'",
+    "ROLLBACK 'kv'",
+    "SEARCH ON 'kv'",
+]
+
+
+def test_staged_rows_reach_spark_without_parallelize(spark, tmp_path, monkeypatch):
+    """Staged rows reach Spark as Arrow tables, never through
+    ``SparkContext.parallelize`` (which starts a Python worker): with it
+    refused, every statement replies as in a run without the patch."""
+    monkeypatch.setattr(wh_mod, "MAX_APPENDED_FILES", 4)
+
+    def run(root):
+        eng = Engine(spark, str(root))
+        replies = []
+        for stmt in _SESSION:
+            r = eng.execute(stmt)
+            replies.append((stmt, r.ok, r.rows()))
+            if stmt == "COMMIT 'kv'":
+                replies.append(_stats(eng.warehouse, "kv"))
+        return replies
+
+    want = run(tmp_path / "plain")
+    assert (1, 2, 2, 3) in want and (2, 1, 0, 0) in want  # an append, then a rewrite
+
+    def refused(*_):
+        raise AssertionError("SparkContext.parallelize called")
+
+    monkeypatch.setattr(SparkContext, "parallelize", refused)
+    assert run(tmp_path / "patched") == want
+
+
+def test_rewrite_stages_only_its_snapshot(engine, monkeypatch):
+    """The COMMIT past the cap stages nothing before its Spark write
+    makes the snapshot directory it renames, and leaves no ``_staged_*``
+    entry behind."""
+    monkeypatch.setattr(wh_mod, "MAX_APPENDED_FILES", 0)
+    _create_kv(engine)
+    d = os.path.join(engine.warehouse.root, "kv")
+    seen = []
+    write_df = Warehouse._write_df
+
+    def spy(df, staged):
+        seen.append([e for e in os.listdir(d) if e.startswith("_staged_")])
+        return write_df(df, staged)
+
+    monkeypatch.setattr(Warehouse, "_write_df", staticmethod(spy))
+    for i in range(2):
+        engine.execute(f"CREATE ROW [id, a] [{i}, {i}] ON 'kv'")
+        engine.execute("EDIT ROW [a] [7] ON 'kv' WHERE id = 0")
+        engine.execute("COMMIT 'kv'")
+    assert seen == [[], []]
+    assert not [e for e in os.listdir(d) if e.startswith("_staged_")]
+    assert _rows(engine.warehouse.read("kv")) == [(0, 7), (1, 1)]
 
 
 def test_auto_commit_past_file_cap(spark, tmp_path, monkeypatch):
@@ -285,24 +365,6 @@ def test_unreadable_container_is_left_out(spark, tmp_path):
     assert _rows(reopened.warehouse.read("kv")) == [(1, 1)]
     with pytest.raises(ValueError, match="already exists"):
         _create_kv(reopened, "bad")
-
-
-def test_reopen_reads_a_files_only_manifest(spark, tmp_path):
-    """A manifest that lists only files (``{"files": [...]}``, written
-    before ops were committed) still reads, and takes commits."""
-    root = str(tmp_path / "wh")
-    eng = Engine(spark, root)
-    _create_kv(eng)
-    eng.execute("CREATE ROW [id, a] [1, 1] ON 'kv'")
-    eng.execute("COMMIT 'kv'")
-    manifest = tmp_path / "wh" / "kv" / "v_1" / wh_mod.MANIFEST
-    m = json.loads(manifest.read_text())
-    manifest.write_text(json.dumps({"files": m["entries"], "appended": m["appended"]}))
-    reopened = Engine(spark, root)
-    reopened.execute("DELETE ROW ON 'kv' WHERE id = 1")
-    reopened.execute("CREATE ROW [id, a] [2, 2] ON 'kv'")
-    reopened.execute("COMMIT 'kv'")
-    assert _rows(reopened.warehouse.read("kv")) == [(2, 2)]
 
 
 # -- crashes and concurrent writers ------------------------------------------

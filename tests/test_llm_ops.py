@@ -115,16 +115,6 @@ def test_minhash_lsh_finds_near_dups(spark, docs):
     assert all(r["jaccard"] >= 0.5 for r in out)
 
 
-def test_simhash_identical_docs(spark, docs):
-    sh = {r["doc_id"]: r["simhash"] for r in D.simhash64(docs, "doc_id", "text").collect()}
-    assert sh[0] == sh[1]  # same token multiset -> same signature
-    pairs = {
-        (r["id_a"], r["id_b"]): r["hamming"]
-        for r in D.simhash_near_pairs(docs, "doc_id", "text", max_hamming=10).collect()
-    }
-    assert pairs[(0, 1)] == 0
-
-
 def test_simhash_portable_identical_docs(spark, docs):
     sh = {
         r["doc_id"]: r["simhash"]
@@ -133,9 +123,7 @@ def test_simhash_portable_identical_docs(spark, docs):
     assert sh[0] == sh[1]  # same token set -> same signature
     pairs = {
         (r["id_a"], r["id_b"]): r["hamming"]
-        for r in D.simhash_near_pairs(
-            docs, "doc_id", "text", max_hamming=10, portable=True
-        ).collect()
+        for r in D.simhash_near_pairs(docs, "doc_id", "text", max_hamming=10).collect()
     }
     assert pairs[(0, 1)] == 0
 

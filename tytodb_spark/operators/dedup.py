@@ -18,8 +18,6 @@ closest is first-column uniqueness via the index (src/indexing.rs).
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
@@ -247,61 +245,13 @@ def cross_source_dup_matrix(
 # ---------------------------------------------------------------------------
 
 
-def simhash64(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """64-bit SimHash per document: each distinct token votes ±1 on every
-    bit of its xxhash64; sign of the vote sum becomes the bit.
-
-    SHUFFLE-FREE: token hashing stays JVM-side (`xxhash64` per distinct
-    token, codegen'd), and the 64-bit vote/pack runs as one vectorized
-    NumPy pass per Arrow batch. The previous formulation exploded tokens
-    and ran a 64-aggregate groupBy — a full shuffle of every token plus
-    a huge codegen unit; this one is map-only, so at corpus scale it
-    pipelines with the scan and the only shuffle left in SimHash dedup
-    is the band self-join. Docs with no tokens are dropped (same as the
-    explode+groupBy semantics, where they simply had no rows)."""
-
-    @F.pandas_udf("long")
-    def _pack(hashes: pd.Series) -> pd.Series:
-        if hashes.empty:
-            return pd.Series([], dtype="int64")
-        arrs = [np.asarray(a, dtype=np.int64).astype(np.uint64) for a in hashes]
-        lens = np.fromiter((len(a) for a in arrs), dtype=np.int64, count=len(arrs))
-        flat = np.concatenate(arrs)
-        # (tokens, 64) ±1 votes; segment-sum per doc; sign → bit
-        bits = ((flat[:, None] >> np.arange(64, dtype=np.uint64)) & 1).astype(np.int32)
-        votes = np.add.reduceat(bits * 2 - 1, np.r_[0, np.cumsum(lens)[:-1]], axis=0)
-        weights = np.uint64(1) << np.arange(64, dtype=np.uint64)
-        packed = ((votes > 0).astype(np.uint64) * weights).sum(
-            axis=1, dtype=np.uint64
-        )
-        return pd.Series(packed.view(np.int64))
-
-    tok_hashes = F.transform(
-        F.array_distinct(word_ngrams(F.col("__txt"), 1)), lambda t: F.xxhash64(t)
-    )
-    return (
-        # spread: only for the single-file local fixture — a real table's
-        # scan is already split, making this whole operator map-only
-        spread(df.select(F.col(id_col), F.col(text_col).alias("__txt")), id_col)
-        .select(F.col(id_col), tok_hashes.alias("__th"))
-        # empty docs have no votes — excluded (reduceat also requires
-        # non-empty segments)
-        .filter(F.size("__th") > 0)
-        .select(id_col, _pack("__th").alias("simhash"))
-    )
-
-
 def simhash64_portable(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Engine-portable SimHash: each distinct token hashes to 64 bits via
     md5 (two 32-bit hex halves), votes ±1 per bit, sign of the vote sum
-    becomes the bit. Same construction as :func:`simhash64` but over a
-    hash family (md5 → hex → int) that ANY engine reproduces bit-for-bit,
-    so a DuckDB oracle can recompute identical signatures — the
-    cross-engine verification path. Map-only (one fold over the token
-    array with a 64-wide zip_with accumulator; no shuffle, no Python).
-
-    :func:`simhash64` (xxhash64 + vectorized Arrow pack) remains the
-    throughput path when cross-engine reproducibility isn't needed.
+    becomes the bit. The hash family (md5 → hex → int) is one ANY engine
+    reproduces bit-for-bit, so a DuckDB oracle can recompute identical
+    signatures. Map-only (one fold over the token array with a 64-wide
+    zip_with accumulator; no shuffle, no Python).
 
     Output: (id, simhash) — bit i of the signature = majority vote of
     token-hash bit i (strict: ties → 0)."""
@@ -348,16 +298,14 @@ def simhash_near_pairs(
     id_col: str,
     text_col: str,
     max_hamming: int = 3,
-    portable: bool = False,
 ) -> DataFrame:
     """Near-dup pairs by SimHash banding: split the 64-bit signature into
     4 16-bit bands; Hamming ≤ 3 implies at least one band is identical
     (pigeonhole), so a 4-way band self-join finds all such pairs without
     a cross join. Verified with an exact popcount filter.
 
-    ``portable=True`` swaps the signature family to the md5-based
-    :func:`simhash64_portable` (bit-identical in other engines → DuckDB
-    oracle-checkable); the banding/verify plan is unchanged.
+    The signatures are :func:`simhash64_portable`'s (bit-identical in
+    other engines → DuckDB oracle-checkable).
 
     The signature table is checkpointed: both sides of the band
     self-join consume it, and without the barrier each branch would
@@ -366,8 +314,7 @@ def simhash_near_pairs(
     formulation). localCheckpoint rather than persist so the blocks
     are released with the plan by the context cleaner — an operator
     cannot unpersist a frame it returns."""
-    sig_fn = simhash64_portable if portable else simhash64
-    sh = sig_fn(df, id_col, text_col).localCheckpoint(eager=False)
+    sh = simhash64_portable(df, id_col, text_col).localCheckpoint(eager=False)
     banded = sh.select(
         F.col(id_col).alias("__id"),
         "simhash",

@@ -35,12 +35,13 @@ one projection (each column's value after the edits), each op limited
 to the rows of the files before it. A read of staged ops applies them
 on top (``_overlay``); ``_op_columns`` is what an op does in both.
 
-A COMMIT appends its staged change to the manifest: each run of staged
-inserts becomes ONE file that pyarrow writes on the driver, each edit
-or delete an op entry, in staging order. So no such COMMIT runs a Spark
-job (a Spark write of a few rows pays a job, a task and a Python-worker
-round trip, hundreds of milliseconds). It rewrites the fold (committed
-entries + staged ops) in one Spark job instead, one file for a small
+Each run of staged inserts (``_runs``) becomes ONE Arrow table
+(``_arrow``): a read unions it as a DataFrame the JVM decodes (no
+Python worker), and a COMMIT appends it to the manifest as ONE file
+pyarrow writes on the driver, each edit or delete as an op entry, in
+staging order. So no such COMMIT runs a Spark job (a Spark write of a
+few rows pays a job and a task). It rewrites the committed snapshot
+with the staged ops overlaid, in one Spark job and one file for a small
 table, when it would take the snapshot past MAX_APPENDED_FILES appended
 entries, or when one of its ops reads a column a committed op assigned
 (see ``_Fold``). A commit registers its new version's fold, extended
@@ -278,6 +279,20 @@ class _Fold:
         return _Fold(files, values, keep, self.scan if files == self.files else None)
 
 
+def _runs(ops: list[_Op]) -> list[list[dict] | _Op]:
+    """``ops`` in order, each run of consecutive staged inserts as ONE
+    list of its rows, each edit or delete as it is."""
+    out: list[list[dict] | _Op] = []
+    for op in ops:
+        if op.kind != "insert":
+            out.append(op)
+        elif out and isinstance(out[-1], list):
+            out[-1].extend(op.rows)
+        else:
+            out.append(list(op.rows))
+    return out
+
+
 def _exact_int(value: object) -> int:
     """An integer literal parsed exactly; only a real float truncates
     toward zero, NaN and infinities refused (src/alba_types.rs:146-151).
@@ -377,8 +392,7 @@ class Warehouse:
     def _manifest(self, name: str, version: int) -> _Manifest:
         with open(os.path.join(self._snapshot_path(name, version), MANIFEST)) as f:
             m = json.load(f)
-        # a manifest written before ops were committed lists only files
-        return _Manifest(tuple(map(_entry, m["entries"] if "entries" in m else m["files"])), m["appended"])
+        return _Manifest(tuple(map(_entry, m["entries"])), m["appended"])
 
     # -- schema helpers ----------------------------------------------------
     def spark_schema(self, name: str) -> T.StructType:
@@ -387,6 +401,11 @@ class Warehouse:
             dt, _cap = ALBA_TYPES[alba]
             fields.append(T.StructField(col, dt, True))
         return T.StructType(fields)
+
+    def _arrow(self, name: str, rows: list[dict]) -> pa.Table:
+        """Staged rows of ``name`` as one Arrow table of its columns."""
+        schema = pa.schema([(f.name, _ARROW_TYPES[f.dataType.typeName()]) for f in self.spark_schema(name).fields])
+        return pa.Table.from_pylist(rows, schema=schema)
 
     def declared(self, name: str) -> list[tuple[str, T.DataType, int | None]]:
         """(column, Spark type, declared ALBA size or None) of a
@@ -508,19 +527,6 @@ class Warehouse:
             raise KeyError(f"{name!r} has no retained snapshot v{version}")
         return self.read_committed(name, version)
 
-    def _local_df(self, name: str, rows: list[dict]) -> DataFrame:
-        """Rows → ONE-slice DataFrame. ``createDataFrame(list)`` parallelizes
-        into default-parallelism slices and each slice pays a Python-worker
-        round-trip downstream (~130 ms each, so a 10-row staged batch costs
-        ~4 s at the snapshot write); ``coalesce(1)`` afterwards is worse —
-        the single task drains every slice sequentially. One slice from the
-        start sidesteps both."""
-        schema = self.spark_schema(name)
-        data = [tuple(r[f.name] for f in schema.fields) for r in rows]
-        return self.spark.createDataFrame(
-            self.spark.sparkContext.parallelize(data, 1), schema
-        )
-
     def pin(self, name: str) -> int:
         """Pin the current snapshot of a container and return its
         version: COMMITs do not retire it until ``unpin``, so a reader
@@ -590,34 +596,18 @@ class Warehouse:
             return self.external[name]
         raise KeyError(f"no such container {name!r}")
 
-    def _overlay(self, name: str, df: DataFrame, ops: list[_Entry]) -> DataFrame:
-        """Staged ``ops`` applied to ``df`` in order: a staged insert or a
-        file (a path under the container) adds rows, an edit or delete
-        changes the rows before it. Adjacent staged inserts are batched
-        into ONE single-slice DataFrame: a commit after N row inserts
-        would otherwise union N separate createDataFrame plans.
-        Ordering across insert/edit/delete boundaries is preserved — only
-        runs of consecutive inserts merge."""
-        pending: list[dict] = []
-
-        def flush(d: DataFrame) -> DataFrame:
-            if not pending:
-                return d
-            new = self._local_df(name, pending)
-            pending.clear()
-            return d.unionByName(new)
-
-        for op in ops:
-            if isinstance(op, str):
-                path = os.path.join(self._dir(name), op)
-                df = flush(df).unionByName(self.spark.read.schema(self.spark_schema(name)).parquet(path))
-            elif op.kind == "insert":
-                pending.extend(op.rows)
+    def _overlay(self, name: str, df: DataFrame, ops: list[_Op]) -> DataFrame:
+        """Staged ``ops`` applied to ``df`` in order: each run of staged
+        inserts adds its rows as ONE Arrow table, which the JVM decodes
+        (no Python worker), and an edit or delete changes the rows
+        before it."""
+        for e in _runs(ops):
+            if isinstance(e, list):
+                df = df.unionByName(self.spark.createDataFrame(self._arrow(name, e), self.spark_schema(name)))
             else:
-                out = _op_columns(op, {})
-                df = flush(df)
-                df = df.filter(out) if op.kind == "delete" else df.withColumns(out)
-        return flush(df)
+                out = _op_columns(e, {})
+                df = df.filter(out) if e.kind == "delete" else df.withColumns(out)
+        return df
 
     # -- staged writes ---------------------------------------------------------
     def _coerce_value(self, value: object, alba: str) -> object:
@@ -731,15 +721,12 @@ class Warehouse:
         """The entries of ``new`` in ``staged``: each list of staged rows
         written from the driver as one Parquet file (pyarrow, no Spark
         job) and named by it, each edit or delete as it is."""
-        schema = pa.schema(
-            [(f.name, _ARROW_TYPES[f.dataType.typeName()]) for f in self.spark_schema(name).fields]
-        )
         os.makedirs(staged)
         out: list[_Entry] = []
         for e in new:
             if isinstance(e, list):
                 fname = f"part-{uuid.uuid4().hex}.parquet"
-                pq.write_table(pa.Table.from_pylist(e, schema=schema), os.path.join(staged, fname))
+                pq.write_table(self._arrow(name, e), os.path.join(staged, fname))
                 e = fname
             out.append(e)
         return out
@@ -817,32 +804,15 @@ class Warehouse:
         appended to the manifest in staging order, each run of inserts
         as one driver-written file, while the snapshot has room for the
         entries and its fold takes the ops; else one Spark rewrite of
-        the fold."""
+        the committed snapshot with ``ops`` overlaid."""
         version = self._current_version(name) + 1
         old = self._manifest(name, version - 1)
-        new: list[list[dict] | _Op] = []
-        for op in ops:
-            if op.kind != "insert":
-                new.append(op)
-            elif new and isinstance(new[-1], list):
-                new[-1].extend(op.rows)
-            else:
-                new.append(list(op.rows))
+        new = _runs(ops)
         if old.then(new).appended <= MAX_APPENDED_FILES and self._snapshot(name, version - 1)[0].takes(ops):
             self._write_snapshot(name, version, lambda s: self._write_entries(name, new, s), old)
             return
-        # The staged rows reach the rewrite as files pyarrow writes on the
-        # driver: a Spark read of rows from the driver starts a Python
-        # worker (~2 s and ~130 MB the first time).
-        rows = os.path.join(self._dir(name), f"_staged_{uuid.uuid4().hex}")
-        try:
-            entries = [os.path.join(os.path.basename(rows), e) if isinstance(e, str) else e
-                       for e in self._write_entries(name, new, rows)]
-            df = self._overlay(name, self.read_committed(name, version - 1), entries)
-            df = self._one_file_if_small(name, df)
-            self._write_snapshot(name, version, lambda s: self._write_df(df, s))
-        finally:
-            shutil.rmtree(rows, ignore_errors=True)
+        df = self._one_file_if_small(name, self._overlay(name, self.read_committed(name, version - 1), ops))
+        self._write_snapshot(name, version, lambda s: self._write_df(df, s))
 
     def rollback(self, name: str | None = None) -> None:
         names = [name] if name else list(self._state)
